@@ -6,13 +6,18 @@ each entry (GeoParser hands the bytes to Tika at
 /root/reference/geoparser_app/views.py:125 and indexes whatever text
 comes back).  This module is the Spark-side equivalent: an archive
 payload becomes an ordered span stream by walking its entries in
-container order and dispatching each entry — by filename suffix — into
-the SAME leaf extractors the top-level dispatch table uses, so a
-`.docx` inside a `.zip` produces exactly the spans it would produce as
-a standalone document.
+container order, mapping each entry's filename suffix to a span kind,
+and dispatching the entry's raw bytes through the SAME guarded call the
+top-level spans use (extract.extract_span), so a `.docx` inside a
+`.zip` produces exactly the spans it would produce as a standalone
+document.
 
-Contracts (shared with every extractor in this package):
-  * damaged input degrades to ``[]`` — never an exception;
+Contracts:
+  * degrade: this module only walks; every entry — a nested archive
+    included — is dispatched through extract.extract_span, the one
+    degrade boundary, so a damaged entry yields ``[]`` alone and its
+    siblings keep their spans; a container that cannot be opened or
+    read at all degrades to ``[]`` at the same boundary;
   * deterministic: entries are walked in the container's own order
     (zip central-directory order, tar stream order), which is part of
     the file's bytes, never filesystem or hash order;
@@ -21,41 +26,16 @@ Contracts (shared with every extractor in this package):
     archive recurses once; deeper nesting degrades to nothing for the
     inner payload, not an error).
 
-Everything here is stdlib (zipfile/tarfile/gzip over BytesIO) + the
-package's own leaf extractors; it runs inside the Arrow-batched
-extract kernel, so per-payload Python is the job, not overhead.
+Everything here is stdlib (zipfile/tarfile/gzip over BytesIO); it runs
+inside the Arrow-batched extract kernel, so per-payload Python is the
+job, not overhead.
 """
 from __future__ import annotations
 
-import base64
 import gzip
 import io
 import tarfile
 import zipfile
-from struct import error as struct_error
-
-from geoparser_spark.operators.html_main import extract_html_blocks
-from geoparser_spark.operators.biff_legacy import (
-    extract_ppt_b64_text_blocks,
-    extract_xls_b64_text_blocks,
-)
-from geoparser_spark.operators.doc_legacy import extract_doc_b64_text_blocks
-from geoparser_spark.operators.email_text import extract_eml_text_blocks
-from geoparser_spark.operators.office_text import (
-    extract_docx_b64_text_blocks,
-    extract_epub_b64_text_blocks,
-    extract_odt_b64_text_blocks,
-    extract_pptx_b64_text_blocks,
-    extract_rtf_text_blocks,
-    extract_xlsx_b64_text_blocks,
-)
-from geoparser_spark.operators.csv_text import extract_csv_text_blocks
-from geoparser_spark.operators.markdown_text import extract_markdown_spans
-from geoparser_spark.operators.audio_meta import extract_audio_b64_spans
-from geoparser_spark.operators.video_meta import extract_video_b64_spans
-from geoparser_spark.operators.image_meta import extract_image_b64_spans
-from geoparser_spark.operators.pdf_text import extract_pdf_b64_spans
-from geoparser_spark.operators.xml_text import extract_xml_text_blocks
 
 #: guards — sized so a hostile archive cannot blow an Arrow task's heap
 MAX_ENTRIES = 512          # entries walked per archive (incl. nested)
@@ -63,85 +43,31 @@ MAX_MEMBER_BYTES = 32 << 20   # one decompressed member
 MAX_TOTAL_BYTES = 128 << 20   # sum of decompressed members per payload
 MAX_DEPTH = 2              # archive-in-archive recurses once
 
-
-def _norm(s: str) -> str:
-    return " ".join(s.split())
-
-
-def _txt_spans(text: bytes) -> list[tuple]:
-    t = _norm(text.decode("utf-8", errors="replace"))
-    return [("text", t, None)] if t else []
-
-
-def _b64(raw: bytes) -> str:
-    return base64.b64encode(raw).decode("ascii")
-
-
-def _wrap_blocks_str(fn):
-    def run(raw: bytes) -> list[tuple]:
-        s = raw.decode("utf-8", errors="replace")
-        return [("text", b, None) for b in fn(s)]
-    return run
-
-
-def _wrap_spans_str(fn):
-    def run(raw: bytes) -> list[tuple]:
-        return list(fn(raw.decode("utf-8", errors="replace")))
-    return run
-
-
-def _wrap_blocks_b64(fn):
-    def run(raw: bytes) -> list[tuple]:
-        return [("text", b, None) for b in fn(_b64(raw))]
-    return run
-
-
-def _wrap_spans_b64(fn):
-    def run(raw: bytes) -> list[tuple]:
-        return list(fn(_b64(raw)))
-    return run
-
-
-# Entry-name suffix → leaf extractor over the entry's raw bytes.  This
-# mirrors extract._SPAN_EXTRACTORS (the Tika auto-detect role) at the
-# archive-member level; suffixes are matched case-insensitively and
-# longest-first so ``.tar.gz`` beats ``.gz``.
-_ENTRY_EXTRACTORS: dict = {
-    ".html": _wrap_spans_str(extract_html_blocks),
-    ".htm": _wrap_spans_str(extract_html_blocks),
-    ".md": _wrap_spans_str(extract_markdown_spans),
-    ".markdown": _wrap_spans_str(extract_markdown_spans),
-    ".xml": _wrap_blocks_str(extract_xml_text_blocks),
-    ".csv": _wrap_blocks_str(extract_csv_text_blocks),
-    ".rtf": _wrap_blocks_str(extract_rtf_text_blocks),
-    ".eml": _wrap_blocks_str(extract_eml_text_blocks),
-    ".txt": _txt_spans,
-    ".text": _txt_spans,
-    ".pdf": _wrap_spans_b64(extract_pdf_b64_spans),
-    ".docx": _wrap_blocks_b64(extract_docx_b64_text_blocks),
-    ".doc": _wrap_blocks_b64(extract_doc_b64_text_blocks),
-    ".pptx": _wrap_blocks_b64(extract_pptx_b64_text_blocks),
-    ".ppt": _wrap_blocks_b64(extract_ppt_b64_text_blocks),
-    ".xlsx": _wrap_blocks_b64(extract_xlsx_b64_text_blocks),
-    ".xls": _wrap_blocks_b64(extract_xls_b64_text_blocks),
-    ".epub": _wrap_blocks_b64(extract_epub_b64_text_blocks),
-    ".odt": _wrap_blocks_b64(extract_odt_b64_text_blocks),
-    ".png": _wrap_spans_b64(extract_image_b64_spans),
-    ".gif": _wrap_spans_b64(extract_image_b64_spans),
-    ".jpg": _wrap_spans_b64(extract_image_b64_spans),
-    ".jpeg": _wrap_spans_b64(extract_image_b64_spans),
-    ".bmp": _wrap_spans_b64(extract_image_b64_spans),
-    ".tif": _wrap_spans_b64(extract_image_b64_spans),
-    ".tiff": _wrap_spans_b64(extract_image_b64_spans),
-    ".wav": _wrap_spans_b64(extract_audio_b64_spans),
-    ".flac": _wrap_spans_b64(extract_audio_b64_spans),
-    ".mp3": _wrap_spans_b64(extract_audio_b64_spans),
-    ".mp4": _wrap_spans_b64(extract_video_b64_spans),
-    ".m4v": _wrap_spans_b64(extract_video_b64_spans),
-    ".mov": _wrap_spans_b64(extract_video_b64_spans),
+# Entry-name suffix → span kind of extract._SPAN_EXTRACTORS (the Tika
+# auto-detect role at the archive-member level); matched
+# case-insensitively, and ``.tar.gz`` is checked before ``.gz``.  An
+# unknown suffix is text passthrough, like the top-level dispatch's
+# unknown-kind branch.
+_SUFFIX_KINDS: dict = {
+    ".html": "html", ".htm": "html",
+    ".md": "markdown", ".markdown": "markdown",
+    ".xml": "xml", ".csv": "csv", ".rtf": "rtf", ".eml": "eml",
+    ".txt": "text", ".text": "text",
+    ".pdf": "pdf_bytes",
+    ".docx": "docx_bytes", ".doc": "doc_bytes",
+    ".pptx": "pptx_bytes", ".ppt": "ppt_bytes",
+    ".xlsx": "xlsx_bytes", ".xls": "xls_bytes",
+    ".epub": "epub_bytes", ".odt": "odt_bytes",
+    ".png": "image_bytes", ".gif": "image_bytes", ".jpg": "image_bytes",
+    ".jpeg": "image_bytes", ".bmp": "image_bytes", ".tif": "image_bytes",
+    ".tiff": "image_bytes",
+    ".wav": "audio_bytes", ".flac": "audio_bytes", ".mp3": "audio_bytes",
+    ".mp4": "video_bytes", ".m4v": "video_bytes", ".mov": "video_bytes",
+    ".zip": "zip_bytes", ".tar": "tar_bytes", ".tgz": "tar_bytes",
+    ".gz": "gz_bytes",
 }
 
-_ARCHIVE_SUFFIXES = (".zip", ".tar", ".tgz", ".tar.gz", ".gz")
+_ARCHIVE_KINDS = frozenset({"zip_bytes", "tar_bytes", "gz_bytes"})
 
 
 class _Budget:
@@ -165,37 +91,33 @@ class _Budget:
         return True
 
 
+def _entry_kind(low: str) -> str:
+    if low.endswith(".tar.gz"):
+        return "tar_bytes"
+    base = low.rsplit("/", 1)[-1]
+    dot = base.rfind(".")
+    return _SUFFIX_KINDS.get(base[dot:], "text") if dot >= 0 else "text"
+
+
 def _entry_spans(name: str, raw: bytes, depth: int,
                  budget: _Budget) -> list[tuple]:
+    from geoparser_spark.operators.extract import extract_span
+
     low = name.lower().rstrip("/")
-    base = low.rsplit("/", 1)[-1]
-    # nested archives first, longest-suffix wins (.tar.gz over .gz)
-    if low.endswith((".zip", ".tar", ".tgz")) or low.endswith(".tar.gz"):
-        if depth + 1 >= MAX_DEPTH:  # depth = current archive's level
-            return []
-        if low.endswith(".zip"):
-            return _zip_spans(raw, depth + 1, budget)
-        return _tar_spans(raw, depth + 1, budget)
-    if low.endswith(".gz"):
-        if depth + 1 >= MAX_DEPTH:
-            return []
-        return _gzip_spans(raw, low[:-3], depth + 1, budget)
-    dot = base.rfind(".")
-    fn = _ENTRY_EXTRACTORS.get(base[dot:]) if dot >= 0 else _txt_spans
-    if fn is None:
-        # unknown suffix: conservative text passthrough, like the
-        # top-level dispatch's unknown-kind branch (extract.py)
-        fn = _txt_spans
-    try:
-        return fn(raw)
-    except Exception:
-        # a leaf extractor's own contract is degrade-to-[], but a
-        # mislabeled entry (e.g. binary named .txt hitting a decoder
-        # edge) must not kill the whole archive walk
+    kind = _entry_kind(low)
+    if kind not in _ARCHIVE_KINDS:
+        return extract_span(kind, raw)
+    if depth + 1 >= MAX_DEPTH:  # depth = current archive's level
         return []
+    if kind == "gz_bytes":
+        return extract_span(kind, raw, depth + 1, budget, low)
+    return extract_span(kind, raw, depth + 1, budget)
 
 
-def _zip_spans(raw: bytes, depth: int, budget: _Budget) -> list[tuple]:
+def zip_spans(raw: bytes, depth: int = 0,
+              budget: _Budget | None = None) -> list[tuple]:
+    """ZIP container → ordered spans of its extracted entries."""
+    budget = budget or _Budget()
     out: list[tuple] = []
     with zipfile.ZipFile(io.BytesIO(raw)) as zf:
         for info in zf.infolist():  # central-directory order
@@ -212,7 +134,10 @@ def _zip_spans(raw: bytes, depth: int, budget: _Budget) -> list[tuple]:
     return out
 
 
-def _tar_spans(raw: bytes, depth: int, budget: _Budget) -> list[tuple]:
+def tar_spans(raw: bytes, depth: int = 0,
+              budget: _Budget | None = None) -> list[tuple]:
+    """tar / tar.gz container → ordered spans (mode ``r:*`` sniffs)."""
+    budget = budget or _Budget()
     out: list[tuple] = []
     with tarfile.open(fileobj=io.BytesIO(raw), mode="r:*") as tf:
         for member in tf:  # stream order
@@ -230,53 +155,20 @@ def _tar_spans(raw: bytes, depth: int, budget: _Budget) -> list[tuple]:
     return out
 
 
-def _gzip_spans(raw: bytes, inner_name: str, depth: int,
-                budget: _Budget) -> list[tuple]:
+def gz_spans(raw: bytes, depth: int = 0, budget: _Budget | None = None,
+             name: str = "") -> list[tuple]:
+    """Single-member gzip → spans of the decompressed member.
+
+    gzip carries no index: the member is dispatched by the container's
+    own entry name minus ``.gz`` (``page.html.gz`` → html) when it sits
+    inside an archive, as text otherwise.  A gzipped tar should arrive
+    as kind ``tar_bytes`` instead — the tar opener sniffs compression
+    itself.
+    """
+    budget = budget or _Budget()
     # bounded decompress: a .gz bomb stops at the member cap
     with gzip.GzipFile(fileobj=io.BytesIO(raw)) as gf:
         data = gf.read(MAX_MEMBER_BYTES + 1)
     if len(data) > MAX_MEMBER_BYTES or not budget.admit(len(data)):
         return []
-    return _entry_spans(inner_name or "member.txt", data, depth, budget)
-
-
-def _run_archive(fn, raw: bytes) -> list[tuple]:
-    try:
-        return fn(raw, 0, _Budget())
-    except (zipfile.BadZipFile, tarfile.TarError, gzip.BadGzipFile,
-            EOFError, OSError, ValueError, KeyError, struct_error):
-        return []
-
-
-def extract_zip_b64_spans(b64: str) -> list[tuple]:
-    """ZIP container → ordered spans of its extracted entries."""
-    try:
-        raw = base64.b64decode(b64, validate=False)
-    except (ValueError, TypeError):
-        return []
-    return _run_archive(_zip_spans, raw)
-
-
-def extract_tar_b64_spans(b64: str) -> list[tuple]:
-    """tar / tar.gz container → ordered spans (mode ``r:*`` sniffs)."""
-    try:
-        raw = base64.b64decode(b64, validate=False)
-    except (ValueError, TypeError):
-        return []
-    return _run_archive(_tar_spans, raw)
-
-
-def extract_gz_b64_spans(b64: str, inner_name: str = "member.txt") -> list[tuple]:
-    """Single-member gzip → spans of the decompressed member.
-
-    gzip carries no index; the member is dispatched by ``inner_name``
-    (callers that know the original name pass it; default is text).
-    A gzipped tar should arrive as kind ``tar_bytes`` instead — the
-    tar opener sniffs compression itself.
-    """
-    try:
-        raw = base64.b64decode(b64, validate=False)
-    except (ValueError, TypeError):
-        return []
-    return _run_archive(
-        lambda r, d, b: _gzip_spans(r, inner_name, d, b), raw)
+    return _entry_spans(name[:-3], data, depth, budget)

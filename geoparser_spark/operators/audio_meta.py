@@ -21,14 +21,13 @@ Span contract for an ``audio_bytes`` input span (base64 payload):
     ID3v2 text frames + ID3v1 TAG fields.  This is
     the channel a production transcription stage (the audio analogue of
     OCR) would also write into — see :func:`transcribe_audio`.
-Degrade contract: unrecognized or truncated payloads yield [] — never
-an exception out of the extract stage.
+Degrade contract: unrecognized or truncated payloads yield []; any
+other damage degrades at the extract stage's one boundary
+(extract.extract_span), never out of the stage.
 """
 
 from __future__ import annotations
 
-import base64
-import binascii
 import struct
 
 # LIST-INFO sub-chunks whose payload is human text (RIFF spec §INFO).
@@ -287,7 +286,8 @@ def parse_mp3(raw: bytes) -> tuple[int, int, int, int, list[str]] | None:
     body_end = len(raw)
     if body_end - pos >= 128 and raw[body_end - 128:body_end - 125] == b"TAG":
         v1 = raw[body_end - 128:]
-        for lo, hi in ((3, 33), (33, 63), (63, 93), (97, 125)):
+        # title, artist, album, year, comment
+        for lo, hi in ((3, 33), (33, 63), (63, 93), (93, 97), (97, 125)):
             t = v1[lo:hi].split(b"\x00")[0].decode("latin-1").strip()
             if t:
                 texts.append(t)
@@ -357,16 +357,6 @@ def extract_audio_spans(raw: bytes) -> list[tuple[str, str | None, str | None]]:
         if t:
             out.append(("text", t, None))
     return out
-
-
-def extract_audio_b64_spans(b64: str) -> list[tuple[str, str | None, str | None]]:
-    """Base64-wrapped variant — ``audio_bytes`` span payloads carry the
-    byte stream base64-encoded in ``text`` (FIXTURES.md §1)."""
-    try:
-        raw = base64.b64decode(b64, validate=False)
-    except (binascii.Error, ValueError):
-        return []
-    return extract_audio_spans(raw)
 
 
 def transcribe_audio(raw: bytes) -> str:
@@ -690,6 +680,8 @@ def _decode_ms_adpcm(data: bytes, channels: int, block_align: int,
             | (hdr[:, :, :, 1].astype(np.int64) << 8))
     vals = (vals << 48) >> 48              # sign-extend int16 fields
     delta, s1, s2 = vals[:, 0], vals[:, 1], vals[:, 2]   # each (B, C)
+    if int(delta.min()) <= 0:
+        raise ValueError("MS-ADPCM block header idelta must be positive")
     c1 = np.asarray(coef1, dtype=np.int64)[bpred]
     c2 = np.asarray(coef2, dtype=np.int64)[bpred]
 

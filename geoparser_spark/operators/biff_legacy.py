@@ -15,7 +15,8 @@ Contracts mirror the OOXML siblings in office_text.py:
   * .ppt → one block per non-empty paragraph of each text atom
     (atoms in record-stream order, \\r / \\x0b paragraph marks) —
     same shape as extract_pptx_text_blocks.
-Damaged input degrades to [] — never an exception.
+Damaged input raises; the extract stage's one degrade boundary
+(extract.extract_span) turns that into the span's ``[]``.
 
 The fixture writers emit spec-shaped CFB containers (FAT-resident
 streams padded past the 4096 mini cutoff) and real BIFF/PPT record
@@ -25,8 +26,6 @@ streams; reader and writer follow the public specs independently
 
 from __future__ import annotations
 
-import base64
-import binascii
 import math
 import re
 import struct
@@ -147,9 +146,7 @@ def _fmt_number(v: float) -> str:
     """Deterministic cell rendering for numeric records: integers plain,
     everything else shortest-roundtrip repr (mirrors how the xlsx path
     surfaces raw <v> values)."""
-    # inf/nan first: int(inf) raises OverflowError/ValueError, which is
-    # outside the module's "damaged input degrades to []" except tuples
-    if not math.isfinite(v):
+    if not math.isfinite(v):  # int(v) below raises on inf/nan
         return repr(v)
     if v == int(v) and abs(v) < 1e15:
         return str(int(v))
@@ -166,46 +163,43 @@ def _rk_value(rk: int) -> float:
 
 def extract_xls_text_blocks(xls_bytes: bytes) -> list[str]:
     """One text block per non-empty row, (sheet, row, col) order."""
-    try:
-        streams = _cfb_streams(xls_bytes)
-        wb = streams.get("Workbook") or streams.get("Book")
-        if not wb:
-            return []
-        sst: list[str] = []
-        cells: dict[tuple[int, int, int], str] = {}
-        sheet = -1  # globals substream is BOF #0
-        recs = list(_records(wb))
-        for k, (rtype, payload) in enumerate(recs):
-            if rtype == _REC_BOF:
-                sheet += 1
-            elif rtype == _REC_SST:
-                frags = [payload]
-                j = k + 1
-                while j < len(recs) and recs[j][0] == _REC_CONTINUE:
-                    frags.append(recs[j][1])
-                    j += 1
-                sst = _parse_sst(frags)
-            elif rtype == _REC_LABELSST and len(payload) >= 10:
-                row, col, _ixfe, isst = struct.unpack_from("<HHHI", payload)
-                if 0 <= isst < len(sst):
-                    cells[(sheet, row, col)] = sst[isst]
-            elif rtype == _REC_LABEL and len(payload) >= 9:
-                row, col, _ixfe, cch, flags = struct.unpack_from(
-                    "<HHHHB", payload)
-                wide = bool(flags & 0x01)
-                raw = payload[9:9 + cch * (2 if wide else 1)]
-                cells[(sheet, row, col)] = raw.decode(
-                    "utf-16-le" if wide else "latin-1", "replace")
-            elif rtype == _REC_NUMBER and len(payload) >= 14:
-                row, col, _ixfe = struct.unpack_from("<HHH", payload)
-                (v,) = struct.unpack_from("<d", payload, 6)
-                cells[(sheet, row, col)] = _fmt_number(v)
-            elif rtype == _REC_RK and len(payload) >= 10:
-                row, col, _ixfe = struct.unpack_from("<HHH", payload)
-                (rk,) = struct.unpack_from("<I", payload, 6)
-                cells[(sheet, row, col)] = _fmt_number(_rk_value(rk))
-    except (ValueError, struct.error, OSError):
+    streams = _cfb_streams(xls_bytes)
+    wb = streams.get("Workbook") or streams.get("Book")
+    if not wb:
         return []
+    sst: list[str] = []
+    cells: dict[tuple[int, int, int], str] = {}
+    sheet = -1  # globals substream is BOF #0
+    recs = list(_records(wb))
+    for k, (rtype, payload) in enumerate(recs):
+        if rtype == _REC_BOF:
+            sheet += 1
+        elif rtype == _REC_SST:
+            frags = [payload]
+            j = k + 1
+            while j < len(recs) and recs[j][0] == _REC_CONTINUE:
+                frags.append(recs[j][1])
+                j += 1
+            sst = _parse_sst(frags)
+        elif rtype == _REC_LABELSST and len(payload) >= 10:
+            row, col, _ixfe, isst = struct.unpack_from("<HHHI", payload)
+            if 0 <= isst < len(sst):
+                cells[(sheet, row, col)] = sst[isst]
+        elif rtype == _REC_LABEL and len(payload) >= 9:
+            row, col, _ixfe, cch, flags = struct.unpack_from(
+                "<HHHHB", payload)
+            wide = bool(flags & 0x01)
+            raw = payload[9:9 + cch * (2 if wide else 1)]
+            cells[(sheet, row, col)] = raw.decode(
+                "utf-16-le" if wide else "latin-1", "replace")
+        elif rtype == _REC_NUMBER and len(payload) >= 14:
+            row, col, _ixfe = struct.unpack_from("<HHH", payload)
+            (v,) = struct.unpack_from("<d", payload, 6)
+            cells[(sheet, row, col)] = _fmt_number(v)
+        elif rtype == _REC_RK and len(payload) >= 10:
+            row, col, _ixfe = struct.unpack_from("<HHH", payload)
+            (rk,) = struct.unpack_from("<I", payload, 6)
+            cells[(sheet, row, col)] = _fmt_number(_rk_value(rk))
     blocks: list[str] = []
     cur_key: tuple[int, int] | None = None
     cur: list[str] = []
@@ -222,14 +216,6 @@ def extract_xls_text_blocks(xls_bytes: bytes) -> list[str]:
         if t:
             blocks.append(t)
     return blocks
-
-
-def extract_xls_b64_text_blocks(b64: str) -> list[str]:
-    try:
-        raw = base64.b64decode(b64, validate=False)
-    except (binascii.Error, ValueError):
-        return []
-    return extract_xls_text_blocks(raw)
 
 
 # --------------------------------------------------------------- .ppt
@@ -265,15 +251,12 @@ def _ppt_walk(data: bytes, depth: int, out: list[str]) -> None:
 def extract_ppt_text_blocks(ppt_bytes: bytes) -> list[str]:
     """One block per non-empty paragraph of each text atom, atoms in
     record-stream order (\\r / \\x0b are PPT paragraph marks)."""
-    try:
-        streams = _cfb_streams(ppt_bytes)
-        doc = streams.get("PowerPoint Document")
-        if not doc:
-            return []
-        atoms: list[str] = []
-        _ppt_walk(doc, 0, atoms)
-    except (ValueError, struct.error, OSError):
+    streams = _cfb_streams(ppt_bytes)
+    doc = streams.get("PowerPoint Document")
+    if not doc:
         return []
+    atoms: list[str] = []
+    _ppt_walk(doc, 0, atoms)
     blocks: list[str] = []
     for atom in atoms:
         for para in _PPT_PARA.split(atom):
@@ -281,14 +264,6 @@ def extract_ppt_text_blocks(ppt_bytes: bytes) -> list[str]:
             if t:
                 blocks.append(t)
     return blocks
-
-
-def extract_ppt_b64_text_blocks(b64: str) -> list[str]:
-    try:
-        raw = base64.b64decode(b64, validate=False)
-    except (binascii.Error, ValueError):
-        return []
-    return extract_ppt_text_blocks(raw)
 
 
 # ------------------------------------------------------ fixture writers

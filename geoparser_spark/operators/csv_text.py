@@ -7,7 +7,8 @@ block per non-empty row, cells joined with a single space; the
 delimiter is tab if the first line contains more tabs than commas,
 else comma (deterministic — no statistical sniffing); quoting and
 embedded newlines follow the stdlib csv dialect.  Malformed input
-degrades to plain-text-per-line, never an exception.
+degrades to plain-text-per-line (anything else degrades at the
+dispatch boundary, extract.extract_span).
 """
 
 from __future__ import annotations

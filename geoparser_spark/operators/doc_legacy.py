@@ -4,8 +4,8 @@ The reference gets .doc via Tika auto-detect
 (reference: geoparser_app/views.py:125); this is the stdlib
 equivalent, built from the public [MS-CFB] (compound file binary) and
 [MS-DOC] (FIB / Clx / piece table) specifications.  Same contract as
-the other extractors: ordered text blocks, graceful [] degrade on any
-damage — never an exception.
+the other extractors: ordered text blocks; damage raises and degrades
+to ``[]`` at the extract stage's one boundary (extract.extract_span).
 
 Pipeline: CFB container → WordDocument + 0Table/1Table streams →
 FIB fcClx/lcbClx → Clx piece table (PlcPcd) → text pieces (cp1252
@@ -118,74 +118,61 @@ _PARA_SPLIT = re.compile(r"[\r\x07\x0b\x0c]")
 
 def extract_doc_text_blocks(doc_bytes: bytes) -> list[str]:
     """One text block per non-empty paragraph (\\r paragraph marks;
-    \\x07 cell marks and \\x0b/\\x0c breaks also split).  Damaged
-    containers, truncated FIBs or broken piece tables degrade to []."""
-    try:
-        streams = _cfb_streams(doc_bytes)
-        wd = streams.get("WordDocument", b"")
-        if len(wd) < _FC_CLX + 8 or struct.unpack_from("<H", wd, 0)[0] != 0xA5EC:
-            return []
-        flags = struct.unpack_from("<H", wd, 0x0A)[0]
-        table = streams.get("1Table" if flags & 0x0200 else "0Table")
-        if table is None:
-            table = streams.get("0Table") or streams.get("1Table")
-        fc_clx = struct.unpack_from("<I", wd, _FC_CLX)[0]
-        lcb_clx = struct.unpack_from("<I", wd, _FC_CLX + 4)[0]
-        if not table or lcb_clx == 0 or fc_clx + lcb_clx > len(table):
-            return []
-        clx = table[fc_clx : fc_clx + lcb_clx]
-        # Clx = RgPrc* then Pcdt: 0x01 <cb:int16> grpprl | 0x02 <lcb:u32> PlcPcd
-        i = 0
-        plc = b""
-        while i < len(clx):
-            t = clx[i]
-            if t == 0x01:
-                if i + 3 > len(clx):
-                    return []
-                cb = struct.unpack_from("<h", clx, i + 1)[0]
-                i += 3 + max(cb, 0)
-            elif t == 0x02:
-                if i + 5 > len(clx):
-                    return []
-                lcb = struct.unpack_from("<I", clx, i + 1)[0]
-                plc = clx[i + 5 : i + 5 + lcb]
-                break
-            else:
+    \\x07 cell marks and \\x0b/\\x0c breaks also split).  A FIB or
+    piece table that is absent yields [], one that is damaged raises
+    (the dispatch boundary degrades it)."""
+    streams = _cfb_streams(doc_bytes)
+    wd = streams.get("WordDocument", b"")
+    if len(wd) < _FC_CLX + 8 or struct.unpack_from("<H", wd, 0)[0] != 0xA5EC:
+        return []
+    flags = struct.unpack_from("<H", wd, 0x0A)[0]
+    table = streams.get("1Table" if flags & 0x0200 else "0Table")
+    if table is None:
+        table = streams.get("0Table") or streams.get("1Table")
+    fc_clx = struct.unpack_from("<I", wd, _FC_CLX)[0]
+    lcb_clx = struct.unpack_from("<I", wd, _FC_CLX + 4)[0]
+    if not table or lcb_clx == 0 or fc_clx + lcb_clx > len(table):
+        return []
+    clx = table[fc_clx : fc_clx + lcb_clx]
+    # Clx = RgPrc* then Pcdt: 0x01 <cb:int16> grpprl | 0x02 <lcb:u32> PlcPcd
+    i = 0
+    plc = b""
+    while i < len(clx):
+        t = clx[i]
+        if t == 0x01:
+            if i + 3 > len(clx):
                 return []
-        n = (len(plc) - 4) // 12
-        if n <= 0:
+            cb = struct.unpack_from("<h", clx, i + 1)[0]
+            i += 3 + max(cb, 0)
+        elif t == 0x02:
+            if i + 5 > len(clx):
+                return []
+            lcb = struct.unpack_from("<I", clx, i + 1)[0]
+            plc = clx[i + 5 : i + 5 + lcb]
+            break
+        else:
             return []
-        cps = struct.unpack_from(f"<{n + 1}I", plc, 0)
-        pieces: list[str] = []
-        for k in range(n):
-            fc_raw = struct.unpack_from("<I", plc, (n + 1) * 4 + k * 8 + 2)[0]
-            fc = fc_raw & 0x3FFFFFFF
-            ln = cps[k + 1] - cps[k]
-            if ln <= 0 or ln > 1 << 28:
-                continue
-            if fc_raw & 0x40000000:  # fCompressed: cp1252, fc is *2
-                pieces.append(wd[fc // 2 : fc // 2 + ln].decode("cp1252", "replace"))
-            else:
-                pieces.append(wd[fc : fc + 2 * ln].decode("utf-16-le", "replace"))
-        blocks: list[str] = []
-        for para in _PARA_SPLIT.split("".join(pieces)):
-            p = " ".join(_CTRL_RE.sub(" ", para).split())
-            if p:
-                blocks.append(p)
-        return blocks
-    except Exception:
+    n = (len(plc) - 4) // 12
+    if n <= 0:
         return []
-
-
-def extract_doc_b64_text_blocks(b64: str) -> list[str]:
-    import base64
-    import binascii
-
-    try:
-        raw = base64.b64decode(b64, validate=False)
-    except (binascii.Error, ValueError):
-        return []
-    return extract_doc_text_blocks(raw)
+    cps = struct.unpack_from(f"<{n + 1}I", plc, 0)
+    pieces: list[str] = []
+    for k in range(n):
+        fc_raw = struct.unpack_from("<I", plc, (n + 1) * 4 + k * 8 + 2)[0]
+        fc = fc_raw & 0x3FFFFFFF
+        ln = cps[k + 1] - cps[k]
+        if ln <= 0 or ln > 1 << 28:
+            continue
+        if fc_raw & 0x40000000:  # fCompressed: cp1252, fc is *2
+            pieces.append(wd[fc // 2 : fc // 2 + ln].decode("cp1252", "replace"))
+        else:
+            pieces.append(wd[fc : fc + 2 * ln].decode("utf-16-le", "replace"))
+    blocks: list[str] = []
+    for para in _PARA_SPLIT.split("".join(pieces)):
+        p = " ".join(_CTRL_RE.sub(" ", para).split())
+        if p:
+            blocks.append(p)
+    return blocks
 
 
 # ------------------------------------------------------ fixture writer

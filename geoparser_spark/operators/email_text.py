@@ -3,7 +3,8 @@
 The reference routes any uploaded byte stream through Tika auto-detect
 (reference: geoparser_app/views.py:125), which parses message/rfc822.
 This module is the stdlib equivalent, same contract as office_text /
-pdf_text: ordered text blocks, graceful empty degrade on damage.
+pdf_text: ordered text blocks; damage that the stdlib parser rejects
+raises and degrades at the dispatch boundary (extract.extract_span).
 
 Block order: subject first (if any), then body parts in MIME walk
 order.  ``multipart/alternative`` containers contribute ONE branch —
@@ -72,28 +73,20 @@ def _decode_text(part: "email.message.Message") -> str:
 
 
 def extract_eml_text_blocks(eml: str | bytes) -> list[str]:
-    """message/rfc822 → [subject?, *body blocks].  Damaged input
-    degrades to [] — never an exception."""
-    try:
-        if isinstance(eml, bytes):
-            msg = email.message_from_bytes(eml)
-        else:
-            msg = email.message_from_string(eml)
-    except Exception:
-        return []
-    try:
-        blocks: list[str] = []
-        subj = msg.get("Subject")
-        if subj:
-            s = " ".join(str(subj).split())
-            if s:
-                blocks.append(s)
-        blocks.extend(_part_blocks(msg))
-        return blocks
-    except Exception:
-        # a malformed MIME structure must degrade, not kill the
-        # whole Spark extract task
-        return []
+    """message/rfc822 → [subject?, *body blocks].  Malformed MIME
+    raises; extract.extract_span degrades it to []."""
+    if isinstance(eml, bytes):
+        msg = email.message_from_bytes(eml)
+    else:
+        msg = email.message_from_string(eml)
+    blocks: list[str] = []
+    subj = msg.get("Subject")
+    if subj:
+        s = " ".join(str(subj).split())
+        if s:
+            blocks.append(s)
+    blocks.extend(_part_blocks(msg))
+    return blocks
 
 
 def make_mini_eml(subject: str, paragraphs: list[str],

@@ -3,9 +3,16 @@ ordered main-content text + media spans.
 
 Reference dataflow replaced: per-doc HTTP round-trip to a Tika server
 (geoparser_app/views.py:125,357-402 — ~0.6 docs/sec sequential) becomes
-one Arrow-batched ``mapInPandas`` stage: JVM ships columnar batches to
+one Arrow-batched ``mapInArrow`` stage: JVM ships columnar batches to
 the Python worker, the worker parses a whole batch, ships columnar
 results back.  No per-row UDF, no driver loop, no network hop.
+
+This module is the one place a span kind meets its extractor
+(``_SPAN_EXTRACTORS``), the one place a ``*_bytes`` payload is
+base64-decoded, and the one degrade boundary (:func:`extract_span`):
+a damaged payload of any kind becomes that span's ``[]``, never an
+exception that kills the Arrow task.  Archive entries
+(archive_text.py) dispatch through the same call.
 
 Scale notes (100 TB design point):
   * The stage is map-only — zero shuffle.  Upstream, runtime.salted_
@@ -19,162 +26,143 @@ Scale notes (100 TB design point):
 
 from __future__ import annotations
 
+import base64
+import logging
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from geoparser_spark.operators.html_main import extract_html_blocks
 from geoparser_spark.operators.biff_legacy import (
-    extract_ppt_b64_text_blocks,
-    extract_xls_b64_text_blocks,
+    extract_ppt_text_blocks,
+    extract_xls_text_blocks,
 )
-from geoparser_spark.operators.doc_legacy import extract_doc_b64_text_blocks
+from geoparser_spark.operators.doc_legacy import extract_doc_text_blocks
 from geoparser_spark.operators.email_text import extract_eml_text_blocks
 from geoparser_spark.operators.office_text import (
-    extract_docx_b64_text_blocks,
-    extract_epub_b64_text_blocks,
-    extract_odt_b64_text_blocks,
-    extract_pptx_b64_text_blocks,
+    extract_docx_text_blocks,
+    extract_epub_text_blocks,
+    extract_odt_text_blocks,
+    extract_pptx_text_blocks,
     extract_rtf_text_blocks,
-    extract_xlsx_b64_text_blocks,
+    extract_xlsx_text_blocks,
 )
 from geoparser_spark.operators.csv_text import extract_csv_text_blocks
 from geoparser_spark.operators.markdown_text import extract_markdown_spans
-from geoparser_spark.operators.audio_meta import extract_audio_b64_spans
-from geoparser_spark.operators.video_meta import extract_video_b64_spans
-from geoparser_spark.operators.image_meta import extract_image_b64_spans
-from geoparser_spark.operators.pdf_text import extract_pdf_b64_spans
+from geoparser_spark.operators.audio_meta import extract_audio_spans
+from geoparser_spark.operators.video_meta import extract_video_spans
+from geoparser_spark.operators.image_meta import extract_image_spans
+from geoparser_spark.operators.pdf_text import extract_pdf_spans
 from geoparser_spark.operators.xml_text import extract_xml_text_blocks
-from geoparser_spark.operators.archive_text import (
-    extract_gz_b64_spans,
-    extract_tar_b64_spans,
-    extract_zip_b64_spans,
-)
+from geoparser_spark.operators.archive_text import gz_spans, tar_spans, zip_spans
 from geoparser_spark.schemas import EXTRACTED
 
 MEDIA_KINDS = frozenset({"image", "video", "audio", "table"})
 
+_log = logging.getLogger(__name__)
 
-def _norm_text(s: str) -> str:
-    return " ".join(s.split())
+
+def _text_span(text: str) -> list[tuple]:
+    t = " ".join(text.split())
+    return [("text", t, None)] if t else []
 
 
 def _as_text_spans(fn):
     """Lift a blocks extractor (payload → [str]) to the span-triple
     contract (payload → [(kind, text, media_ref)])."""
-    def run(payload: str) -> list[tuple]:
+    def run(payload) -> list[tuple]:
         return [("text", block, None) for block in fn(payload)]
     return run
 
 
-# One dispatch table shared by the dict-based and flat-column extract
-# paths — a format lands in the engine by registering here (the Tika
-# auto-detect role, geoparser_app/views.py:125, resolved from the
-# span's declared kind).
+# Span kind → extractor over the DECODED payload: ``bytes`` for the
+# ``*_bytes`` kinds, ``str`` for the rest.  A format lands in the engine
+# by registering here (the Tika auto-detect role, geoparser_app/
+# views.py:125, resolved from the span's declared kind).
 _SPAN_EXTRACTORS: dict = {
+    "text": _text_span,
     "html": extract_html_blocks,  # emits (kind, text, media_ref) itself
-    "pdf_bytes": extract_pdf_b64_spans,  # text + image-XObject media spans
-    "docx_bytes": _as_text_spans(extract_docx_b64_text_blocks),
-    "doc_bytes": _as_text_spans(extract_doc_b64_text_blocks),
-    "pptx_bytes": _as_text_spans(extract_pptx_b64_text_blocks),
-    "xlsx_bytes": _as_text_spans(extract_xlsx_b64_text_blocks),
-    "xls_bytes": _as_text_spans(extract_xls_b64_text_blocks),
-    "ppt_bytes": _as_text_spans(extract_ppt_b64_text_blocks),
-    "epub_bytes": _as_text_spans(extract_epub_b64_text_blocks),
-    "odt_bytes": _as_text_spans(extract_odt_b64_text_blocks),
+    "pdf_bytes": extract_pdf_spans,  # text + image-XObject media spans
+    "docx_bytes": _as_text_spans(extract_docx_text_blocks),
+    "doc_bytes": _as_text_spans(extract_doc_text_blocks),
+    "pptx_bytes": _as_text_spans(extract_pptx_text_blocks),
+    "xlsx_bytes": _as_text_spans(extract_xlsx_text_blocks),
+    "xls_bytes": _as_text_spans(extract_xls_text_blocks),
+    "ppt_bytes": _as_text_spans(extract_ppt_text_blocks),
+    "epub_bytes": _as_text_spans(extract_epub_text_blocks),
+    "odt_bytes": _as_text_spans(extract_odt_text_blocks),
     "rtf": _as_text_spans(extract_rtf_text_blocks),
     "eml": _as_text_spans(extract_eml_text_blocks),
     "xml": _as_text_spans(extract_xml_text_blocks),
     "csv": _as_text_spans(extract_csv_text_blocks),
-    "image_bytes": extract_image_b64_spans,  # media span + embedded text
-    "audio_bytes": extract_audio_b64_spans,  # media span + embedded tags
-    "video_bytes": extract_video_b64_spans,  # media span + embedded tags
+    "image_bytes": extract_image_spans,  # media span + embedded text
+    "audio_bytes": extract_audio_spans,  # media span + embedded tags
+    "video_bytes": extract_video_spans,  # media span + embedded tags
     "markdown": extract_markdown_spans,  # text blocks + image-link media spans
-    # archive containers recurse into the same leaf extractors per
-    # entry (Tika's RecursiveParserWrapper role) — see archive_text.py
-    "zip_bytes": extract_zip_b64_spans,
-    "tar_bytes": extract_tar_b64_spans,  # tar and tar.gz (r:* sniffs)
-    "gz_bytes": extract_gz_b64_spans,
+    # archive containers walk their entries back through extract_span
+    # (Tika's RecursiveParserWrapper role) — see archive_text.py
+    "zip_bytes": zip_spans,
+    "tar_bytes": tar_spans,  # tar and tar.gz (r:* sniffs)
+    "gz_bytes": gz_spans,
 }
 
 
-def extract_doc_spans(spans: list[dict]) -> list[dict]:
-    """Pure-Python core: input span dicts → ordered output span dicts.
+def extract_span(kind: str, payload: str | bytes, *walk) -> list[tuple]:
+    """One registered span → its output triples (kind, text, media_ref).
 
-    Deterministic; processes spans in ``offset`` order (offset is data,
-    never implicit row order — SURVEY.md §4.2 ordering discipline).
-    """
-    out: list[dict] = []
-    if spans is None:  # Arrow hands array cells over as numpy arrays —
-        spans = []     # never test their truthiness
-    for span in sorted(spans, key=lambda s: s.get("offset") if s.get("offset") is not None else 0):
-        kind = span.get("kind") or ""
-        text = span.get("text")
-        media_ref = span.get("media_ref")
-        fn = _SPAN_EXTRACTORS.get(kind)
-        if fn is not None and text:
-            for k, t, m in fn(text):
-                out.append({"kind": k, "text": t, "media_ref": m})
-        elif kind == "text" and text:
-            t = _norm_text(text)
-            if t:
-                out.append({"kind": "text", "text": t, "media_ref": None})
-        elif media_ref is not None and (kind in MEDIA_KINDS or not text):
-            out.append({"kind": kind, "text": None, "media_ref": media_ref})
-        elif text:
-            # unknown text-bearing kind: conservative passthrough
-            t = _norm_text(text)
-            if t:
-                out.append({"kind": "text", "text": t, "media_ref": None})
-    for i, s in enumerate(out):
-        s["order"] = i
-    return out
-
-
-def _extract_batches(passthrough: tuple[str, ...]):
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": pdf["doc_id"]}
-            for c in passthrough:
-                out[c] = pdf[c]
-            out["spans"] = [
-                [
-                    (s["kind"], s["text"], s["media_ref"], s["order"])
-                    for s in extract_doc_spans(spans)
-                ]
-                for spans in pdf["spans"]
-            ]
-            yield pd.DataFrame(out)
-
-    return kernel
+    ``payload`` is the span's text (base64 for ``*_bytes`` kinds) or an
+    archive entry's raw bytes; ``walk`` is the nesting state
+    archive_text threads into nested containers.  Any failure — bad
+    base64, a truncated container, a codec edge — degrades THIS span to
+    ``[]``: the batch, and the span's siblings, carry on."""
+    try:
+        if kind.endswith("_bytes"):
+            if isinstance(payload, str):
+                payload = base64.b64decode(payload, validate=False)
+        elif isinstance(payload, bytes):
+            payload = payload.decode("utf-8", errors="replace")
+        return list(_SPAN_EXTRACTORS[kind](payload, *walk))
+    except Exception:
+        _log.debug("%s span degraded to []", kind, exc_info=True)
+        return []
 
 
 def extract_doc_spans_cols(kinds, texts, refs, offs, lo: int, hi: int) -> list[tuple]:
-    """Flat-column variant of :func:`extract_doc_spans` for the Arrow
-    path: operates on parallel lists sliced [lo, hi) — no per-span dict
-    allocation.  Returns output span tuples (kind, text, media_ref,
-    order)."""
+    """Extraction core over parallel span columns sliced [lo, hi) — the
+    Arrow path feeds it flat child columns, no per-span dict.  Spans are
+    processed in ``offset`` order (offset is data, never implicit row
+    order — SURVEY.md §4.2 ordering discipline).  The sort is stable:
+    spans with EQUAL offsets keep input-array order, which callers do
+    not control, so their relative order is unspecified.  Returns
+    output span tuples (kind, text, media_ref, order)."""
     idx = sorted(range(lo, hi), key=lambda i: offs[i] if offs[i] is not None else 0)
     out: list[tuple] = []
     for i in idx:
         kind = kinds[i] or ""
         text = texts[i]
         media_ref = refs[i]
-        fn = _SPAN_EXTRACTORS.get(kind)
-        if fn is not None and text:
-            out.extend(fn(text))
-        elif kind == "text" and text:
-            t = _norm_text(text)
-            if t:
-                out.append(("text", t, None))
+        if text and kind in _SPAN_EXTRACTORS:
+            out.extend(extract_span(kind, text))
         elif media_ref is not None and (kind in MEDIA_KINDS or not text):
             out.append((kind, None, media_ref))
         elif text:
-            t = _norm_text(text)
-            if t:
-                out.append(("text", t, None))
+            # unknown text-bearing kind: conservative passthrough
+            out.extend(_text_span(text))
     return [(k, t, m, i) for i, (k, t, m) in enumerate(out)]
+
+
+_SPAN_FIELDS = ("kind", "text", "media_ref", "order")
+
+
+def extract_doc_spans(spans: list[dict]) -> list[dict]:
+    """Dict-shaped view of :func:`extract_doc_spans_cols`: input span
+    dicts → ordered output span dicts."""
+    if spans is None:  # Arrow hands array cells over as numpy arrays —
+        spans = []     # never test their truthiness
+    cols = [[s.get(c) for s in spans]
+            for c in ("kind", "text", "media_ref", "offset")]
+    return [dict(zip(_SPAN_FIELDS, t))
+            for t in extract_doc_spans_cols(*cols, 0, len(spans))]
 
 
 def _extract_arrow_batches(passthrough: tuple[str, ...]):
@@ -303,9 +291,7 @@ def extract_with_skew_split(docs: DataFrame, num_partitions: int,
     if redistribute == "mega-only":
         n_src = docs.rdd.getNumPartitions()
         if n_src < max(2, num_partitions // 2):
-            import logging
-
-            logging.getLogger(__name__).warning(
+            _log.warning(
                 "extract_with_skew_split: source provides only %d scan "
                 "partitions for %d requested — falling back to "
                 "redistribute='all' (pass 'mega-only-strict' to pin "
@@ -325,7 +311,7 @@ def extract_with_skew_split(docs: DataFrame, num_partitions: int,
     # and the extract kernel itself processes spans in offset order, so
     # the split's pre-sort adds nothing for an unsplit doc.  (Relative
     # order of EQUAL offsets is unspecified either way — the documented
-    # stable-sort caveat on extract_doc_spans.)
+    # stable-sort caveat on extract_doc_spans_cols.)
     singles = docs.where(F.size("spans") <= max_spans)
     mega = (
         split_mega_docs(docs.where(F.size("spans") > max_spans), max_spans)

@@ -3,7 +3,7 @@
 Replaces the reference's Tika-server text extraction hop
 (reference: geoparser_app/views.py:125 → Tika HTTP :8001,
 Docker/Dockerfile:33-36) with an in-process, deterministic DOM walk.
-Runs inside Arrow-batched ``mapInPandas`` stages — per-batch Python,
+Runs inside Arrow-batched ``mapInArrow`` stages — per-batch Python,
 never a per-row UDF (SURVEY.md §2.2 E1).
 
 Algorithm (deterministic, fixture-pinned):

@@ -16,14 +16,13 @@ Span contract for an ``image_bytes`` input span (base64 payload):
     uncompressed iTXt values, JPEG COM segments, GIF comment
     extensions.  This is the channel a production OCR stage would also
     write into (see :func:`ocr_image`).
-Degrade contract: unrecognized or truncated payloads yield [] — never
-an exception out of the extract stage.
+Degrade contract: unrecognized or truncated payloads yield []; any
+other damage degrades at the extract stage's one boundary
+(extract.extract_span), never out of the stage.
 """
 
 from __future__ import annotations
 
-import base64
-import binascii
 import struct
 import zlib
 
@@ -278,16 +277,6 @@ def extract_image_spans(raw: bytes) -> list[tuple[str, str | None, str | None]]:
         if t:
             out.append(("text", t, None))
     return out
-
-
-def extract_image_b64_spans(b64: str) -> list[tuple[str, str | None, str | None]]:
-    """Base64-wrapped variant — ``image_bytes`` span payloads carry the
-    byte stream base64-encoded in ``text`` (FIXTURES.md §1)."""
-    try:
-        raw = base64.b64decode(b64, validate=False)
-    except (binascii.Error, ValueError):
-        return []
-    return extract_image_spans(raw)
 
 
 def ocr_image(raw: bytes) -> str:

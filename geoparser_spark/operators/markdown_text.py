@@ -4,8 +4,9 @@ Training corpora are full of Markdown (READMEs, forum exports, docs
 sites); the reference would route it through Tika auto-detect
 (`geoparser_app/views.py:125`).  This is a deterministic CommonMark-
 subset block extractor under the same contract as every other format
-here (html_main, office_text, ...): ordered blocks, degrade-to-partial,
-NEVER an exception.
+here (html_main, office_text, ...): ordered blocks, degrade-to-partial;
+a pathological doc degrades to [] at the dispatch boundary
+(extract.extract_span).
 
 Block rules (documented subset):
 - fenced code blocks (``` or ~~~) become ONE text block of their
@@ -42,13 +43,6 @@ def _norm(s: str) -> str:
 
 def extract_markdown_spans(md: str) -> list[tuple]:
     """markdown string -> ordered [(kind, text, media_ref)] spans."""
-    try:
-        return _extract(md)
-    except Exception:
-        return []  # degrade contract: a pathological doc yields nothing
-
-
-def _extract(md: str) -> list[tuple]:
     lines = md.replace("\r\n", "\n").replace("\r", "\n").split("\n")
     blocks: list[tuple[str, str]] = []  # (type, raw)
     buf: list[str] = []

@@ -4,7 +4,9 @@ The reference routes EVERY uploaded byte stream through a Tika server
 (reference: geoparser_app/views.py:125, Docker/Dockerfile:33-36), which
 gives it DOCX/RTF/etc. for free.  This module covers the two most
 common office formats with stdlib-only parsers, same contract as
-pdf_text: ordered text blocks, graceful empty degrade on damage.
+pdf_text: ordered text blocks.  Damaged zips and missing parts raise;
+the extract stage's one degrade boundary (extract.extract_span) turns
+that into the span's ``[]``.
 
 * DOCX — a zip containing ``word/document.xml``; text lives in
   ``<w:t>`` runs grouped into ``<w:p>`` paragraphs (ECMA-376 / ISO
@@ -21,8 +23,6 @@ as pdf_text.make_mini_pdf).
 
 from __future__ import annotations
 
-import base64
-import binascii
 import io
 import re
 import zipfile
@@ -58,12 +58,9 @@ def _xml_unescape(raw: bytes) -> bytes:
 
 def extract_docx_text_blocks(docx_bytes: bytes) -> list[str]:
     """One text block per non-empty paragraph of word/document.xml.
-    Damaged zips / missing parts degrade to [] — never an exception."""
-    try:
-        with zipfile.ZipFile(io.BytesIO(docx_bytes)) as z:
-            xml = z.read("word/document.xml")
-    except (zipfile.BadZipFile, KeyError, OSError, ValueError):
-        return []
+    Damaged zips / missing parts raise (see module docstring)."""
+    with zipfile.ZipFile(io.BytesIO(docx_bytes)) as z:
+        xml = z.read("word/document.xml")
     blocks: list[str] = []
     for para in _WP_SPLIT.split(xml)[1:]:
         # tabs/breaks sit BETWEEN <w:t> runs; rewrite them as synthetic
@@ -74,14 +71,6 @@ def extract_docx_text_blocks(docx_bytes: bytes) -> list[str]:
         if text:
             blocks.append(text)
     return blocks
-
-
-def extract_docx_b64_text_blocks(b64: str) -> list[str]:
-    try:
-        raw = base64.b64decode(b64, validate=False)
-    except (binascii.Error, ValueError):
-        return []
-    return extract_docx_text_blocks(raw)
 
 
 def make_mini_docx(paragraphs: list[str]) -> bytes:
@@ -127,20 +116,17 @@ def extract_pptx_text_blocks(pptx_bytes: bytes) -> list[str]:
     """One text block per non-empty DrawingML paragraph, slides in
     numeric order (ppt/slides/slide<N>.xml; ECMA-376 PresentationML —
     text lives in ``<a:t>`` runs grouped into ``<a:p>`` paragraphs).
-    Damaged zips / missing parts degrade to [] — never an exception.
+    Damaged zips / missing parts raise (see module docstring).
 
     The reference gets PPTX via Tika auto-detect
     (geoparser_app/views.py:125); this is the stdlib equivalent."""
-    try:
-        with zipfile.ZipFile(io.BytesIO(pptx_bytes)) as z:
-            slides = sorted(
-                (int(m.group(1)), n)
-                for n in z.namelist()
-                if (m := _SLIDE_NAME.match(n))
-            )
-            xmls = [z.read(n) for _, n in slides]
-    except (zipfile.BadZipFile, KeyError, OSError, ValueError):
-        return []
+    with zipfile.ZipFile(io.BytesIO(pptx_bytes)) as z:
+        slides = sorted(
+            (int(m.group(1)), n)
+            for n in z.namelist()
+            if (m := _SLIDE_NAME.match(n))
+        )
+        xmls = [z.read(n) for _, n in slides]
     blocks: list[str] = []
     for xml in xmls:
         for para in _AP_SPLIT.split(xml)[1:]:
@@ -150,14 +136,6 @@ def extract_pptx_text_blocks(pptx_bytes: bytes) -> list[str]:
             if text:
                 blocks.append(text)
     return blocks
-
-
-def extract_pptx_b64_text_blocks(b64: str) -> list[str]:
-    try:
-        raw = base64.b64decode(b64, validate=False)
-    except (binascii.Error, ValueError):
-        return []
-    return extract_pptx_text_blocks(raw)
 
 
 def make_mini_pptx(slides: list[list[str]]) -> bytes:
@@ -242,26 +220,23 @@ def extract_xlsx_text_blocks(xlsx_bytes: bytes) -> list[str]:
     """One text block per non-empty row (cells joined by a space),
     sheets in numeric order.  Shared strings resolved from
     xl/sharedStrings.xml (plain <t> and rich <r><t> runs both
-    concatenate, per spec).  Damaged input degrades to []."""
-    try:
-        with zipfile.ZipFile(io.BytesIO(xlsx_bytes)) as z:
-            names = z.namelist()
-            shared: list[str] = []
-            if "xl/sharedStrings.xml" in names:
-                ss = z.read("xl/sharedStrings.xml")
-                for si in _SI_RE.finditer(ss):
-                    runs = [_xml_unescape(t.group(1))
-                            for t in _T_RE.finditer(si.group(1))]
-                    shared.append(
-                        b"".join(runs).decode("utf-8", "replace"))
-            sheets = sorted(
-                (int(m.group(1)), n)
-                for n in names
-                if (m := _SHEET_NAME.match(n))
-            )
-            xmls = [z.read(n) for _, n in sheets]
-    except (zipfile.BadZipFile, KeyError, OSError, ValueError):
-        return []
+    concatenate, per spec).  Damaged input raises."""
+    with zipfile.ZipFile(io.BytesIO(xlsx_bytes)) as z:
+        names = z.namelist()
+        shared: list[str] = []
+        if "xl/sharedStrings.xml" in names:
+            ss = z.read("xl/sharedStrings.xml")
+            for si in _SI_RE.finditer(ss):
+                runs = [_xml_unescape(t.group(1))
+                        for t in _T_RE.finditer(si.group(1))]
+                shared.append(
+                    b"".join(runs).decode("utf-8", "replace"))
+        sheets = sorted(
+            (int(m.group(1)), n)
+            for n in names
+            if (m := _SHEET_NAME.match(n))
+        )
+        xmls = [z.read(n) for _, n in sheets]
     blocks: list[str] = []
     for xml in xmls:
         for row in _ROW_RE.finditer(xml):
@@ -273,14 +248,6 @@ def extract_xlsx_text_blocks(xlsx_bytes: bytes) -> list[str]:
             if text:
                 blocks.append(text)
     return blocks
-
-
-def extract_xlsx_b64_text_blocks(b64: str) -> list[str]:
-    try:
-        raw = base64.b64decode(b64, validate=False)
-    except (binascii.Error, ValueError):
-        return []
-    return extract_xlsx_text_blocks(raw)
 
 
 def make_mini_xlsx(rows: list[list[str]]) -> bytes:
@@ -344,43 +311,40 @@ def extract_epub_text_blocks(epub_bytes: bytes) -> list[str]:
     META-INF/container.xml → OPF manifest/spine READING ORDER, each
     XHTML chapter routed through the html main-content extractor; if
     the container/OPF is missing or broken, falls back to name-sorted
-    XHTML entries.  Damaged zips degrade to []."""
+    XHTML entries.  A damaged zip raises."""
     import posixpath
 
     from geoparser_spark.operators.html_main import extract_html_blocks
 
-    try:
-        with zipfile.ZipFile(io.BytesIO(epub_bytes)) as z:
-            names = set(z.namelist())
-            ordered: list[str] = []
-            opf_path = None
-            if "META-INF/container.xml" in names:
-                m = _EPUB_FULLPATH.search(z.read("META-INF/container.xml"))
-                if m:
-                    opf_path = m.group(1).decode("utf-8", "replace")
-            if opf_path and opf_path in names:
-                opf = z.read(opf_path)
-                base = posixpath.dirname(opf_path)
-                items: dict[bytes, str] = {}
-                for im in _OPF_ITEM_RE.finditer(opf):
-                    tag = im.group(0)
-                    idm = _OPF_ID_RE.search(tag)
-                    hrm = _OPF_HREF_RE.search(tag)
-                    if idm and hrm:
-                        items[idm.group(1)] = hrm.group(1).decode("utf-8", "replace")
-                for sm in _OPF_IDREF_RE.finditer(opf):
-                    href = items.get(sm.group(1))
-                    if href:
-                        p = posixpath.join(base, href) if base else href
-                        if p in names:
-                            ordered.append(p)
-            if not ordered:
-                ordered = sorted(
-                    n for n in names if n.lower().endswith(_HTML_EXTS)
-                )
-            chapters = [z.read(n) for n in ordered]
-    except (zipfile.BadZipFile, KeyError, OSError, ValueError):
-        return []
+    with zipfile.ZipFile(io.BytesIO(epub_bytes)) as z:
+        names = set(z.namelist())
+        ordered: list[str] = []
+        opf_path = None
+        if "META-INF/container.xml" in names:
+            m = _EPUB_FULLPATH.search(z.read("META-INF/container.xml"))
+            if m:
+                opf_path = m.group(1).decode("utf-8", "replace")
+        if opf_path and opf_path in names:
+            opf = z.read(opf_path)
+            base = posixpath.dirname(opf_path)
+            items: dict[bytes, str] = {}
+            for im in _OPF_ITEM_RE.finditer(opf):
+                tag = im.group(0)
+                idm = _OPF_ID_RE.search(tag)
+                hrm = _OPF_HREF_RE.search(tag)
+                if idm and hrm:
+                    items[idm.group(1)] = hrm.group(1).decode("utf-8", "replace")
+            for sm in _OPF_IDREF_RE.finditer(opf):
+                href = items.get(sm.group(1))
+                if href:
+                    p = posixpath.join(base, href) if base else href
+                    if p in names:
+                        ordered.append(p)
+        if not ordered:
+            ordered = sorted(
+                n for n in names if n.lower().endswith(_HTML_EXTS)
+            )
+        chapters = [z.read(n) for n in ordered]
     blocks: list[str] = []
     for raw in chapters:
         html = raw.decode("utf-8", "replace")
@@ -388,14 +352,6 @@ def extract_epub_text_blocks(epub_bytes: bytes) -> list[str]:
             t for k, t, _m in extract_html_blocks(html) if k == "text" and t
         )
     return blocks
-
-
-def extract_epub_b64_text_blocks(b64: str) -> list[str]:
-    try:
-        raw = base64.b64decode(b64, validate=False)
-    except (binascii.Error, ValueError):
-        return []
-    return extract_epub_text_blocks(raw)
 
 
 def make_mini_epub(chapters: list[list[str]]) -> bytes:
@@ -547,13 +503,9 @@ def extract_odt_text_blocks(odt_bytes: bytes) -> list[str]:
     """One text block per non-empty <text:p>/<text:h> of content.xml,
     document order; whitespace elements become spaces, nested spans
     flatten (tag strip AFTER whitespace rewrite, entity unescape
-    last).  Damaged zips / missing parts degrade to [] — never an
-    exception."""
-    try:
-        with zipfile.ZipFile(io.BytesIO(odt_bytes)) as z:
-            xml = z.read("content.xml")
-    except (zipfile.BadZipFile, KeyError, OSError, ValueError):
-        return []
+    last).  Damaged zips / missing parts raise."""
+    with zipfile.ZipFile(io.BytesIO(odt_bytes)) as z:
+        xml = z.read("content.xml")
     blocks: list[str] = []
     for m in _ODT_PARA.finditer(xml):
         inner = _ODT_WS.sub(b" ", m.group(1))
@@ -563,14 +515,6 @@ def extract_odt_text_blocks(odt_bytes: bytes) -> list[str]:
         if text:
             blocks.append(text)
     return blocks
-
-
-def extract_odt_b64_text_blocks(b64: str) -> list[str]:
-    try:
-        raw = base64.b64decode(b64, validate=False)
-    except (binascii.Error, ValueError):
-        return []
-    return extract_odt_text_blocks(raw)
 
 
 def make_mini_odt(paragraphs: list[str]) -> bytes:

@@ -6,7 +6,8 @@ for the subset of PDF this sandbox can exercise: content streams with
 ``BT ... ET`` text objects and ``Tj`` / ``TJ`` / ``'`` / ``"``
 show-text operators over literal ``(...)`` AND hex ``<...>`` strings.
 Compressed streams inflate via stdlib zlib when the stream dict says
-``/FlateDecode``.  Documented degrades (never a crash):
+``/FlateDecode``.  Documented degrades (a file this module cannot
+parse at all degrades at the dispatch boundary, extract.extract_span):
   * unsupported filters (DCTDecode, LZW, ...) → stream contributes
     nothing;
   * CMap-encoded multi-byte text (Identity-H etc.): embedded
@@ -28,8 +29,6 @@ the ordered-text-blocks contract of SURVEY.md §2.2 E1(b).
 
 from __future__ import annotations
 
-import base64
-import binascii
 import re
 import zlib
 
@@ -243,27 +242,6 @@ def extract_pdf_text_blocks(pdf_bytes: bytes) -> list[str]:
     """Text-only view of :func:`extract_pdf_spans` (the original
     contract; media spans dropped)."""
     return [t for k, t, _ in extract_pdf_spans(pdf_bytes) if k == "text"]
-
-
-def extract_pdf_b64_spans(b64: str) -> list[tuple]:
-    """Base64-wrapped variant of :func:`extract_pdf_spans` — the
-    ``pdf_bytes`` span payload carries the byte stream base64-encoded
-    in ``text`` (FIXTURES.md §1)."""
-    try:
-        raw = base64.b64decode(b64, validate=False)
-    except (binascii.Error, ValueError):
-        return []
-    return extract_pdf_spans(raw)
-
-
-def extract_pdf_b64_text_blocks(b64: str) -> list[str]:
-    """Base64-wrapped variant — the ``pdf_bytes`` span payload per
-    FIXTURES.md §1 carries the byte stream base64-encoded in ``text``."""
-    try:
-        raw = base64.b64decode(b64, validate=False)
-    except (binascii.Error, ValueError):
-        return []
-    return extract_pdf_text_blocks(raw)
 
 
 def make_mini_pdf(pages: list[list[str]], compress: bool = False,

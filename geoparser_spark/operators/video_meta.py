@@ -20,14 +20,13 @@ Parsed subset:
 Span contract for a ``video_bytes`` input span (base64 payload):
   * one media span ("video", None, "vid://{brand}/{w}x{h}/{ms}ms"), then
   * one text span per embedded tag value, in byte order.
-Degrade contract: unrecognized/truncated payloads yield [] — never an
-exception out of the extract stage.
+Degrade contract: unrecognized or truncated payloads yield []; any
+other damage degrades at the extract stage's one boundary
+(extract.extract_span), never out of the stage.
 """
 
 from __future__ import annotations
 
-import base64
-import binascii
 import struct
 
 _TAG_IDS = (b"\xa9nam", b"\xa9cmt", b"desc")
@@ -172,16 +171,6 @@ def extract_video_spans(raw: bytes) -> list[tuple[str, str | None, str | None]]:
     out = [("video", None, f"vid://{brand}/{w}x{h}/{ms}ms")]
     out += [("text", t, None) for t in texts]
     return out
-
-
-def extract_video_b64_spans(b64: str) -> list[tuple[str, str | None, str | None]]:
-    """Base64-wrapped variant — ``video_bytes`` span payloads carry the
-    byte stream base64-encoded in ``text`` (FIXTURES.md §1)."""
-    try:
-        raw = base64.b64decode(b64, validate=False)
-    except (binascii.Error, ValueError):
-        return []
-    return extract_video_spans(raw)
 
 
 # ---------------------------------------------------------------- fixtures

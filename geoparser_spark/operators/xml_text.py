@@ -13,10 +13,11 @@ Block contract (deterministic, fixture-pinned):
     in document order.
   * every block is whitespace-normalized; blank blocks are dropped.
 
-Degrade contract: malformed XML, undefined entities, or a DTD internal
-subset that declares entities (billion-laughs guard — modern expat caps
-amplification, but an input this shape is never worth parsing for text)
-all degrade to [] — never an exception out of the extract stage.
+Degrade contract: a DTD internal subset that declares entities
+(billion-laughs guard — modern expat caps amplification, but an input
+this shape is never worth parsing for text) yields [].  Malformed XML
+and undefined entities raise ``ParseError``, which the extract stage's
+one degrade boundary (extract.extract_span) turns into ``[]``.
 """
 
 from __future__ import annotations
@@ -55,10 +56,7 @@ def extract_xml_text_blocks(s: str) -> list[str]:
         return []
     if _prolog_declares_entities(s):
         return []  # internal DTD subset: entity-expansion guard
-    try:
-        root = ET.fromstring(s)
-    except ET.ParseError:
-        return []
+    root = ET.fromstring(s)
     children = list(root)
     if not children:
         b = _norm("".join(root.itertext()))

@@ -59,7 +59,7 @@ def split_mega_docs(docs: DataFrame, max_spans: int = 64) -> DataFrame:
     untrusted data (SURVEY.md §4.2), and a doc whose spans arrive
     offset-shuffled would otherwise reassemble wrong.  (For spans with
     EQUAL offsets the relative order is unspecified, matching the
-    stable-sort caveat documented on extract_doc_spans.)
+    stable-sort caveat documented on extract_doc_spans_cols.)
 
     Output: (doc_id, chunk_id, n_chunks, spans).  Reassemble with
     :func:`reassemble_chunks` after a per-chunk stage."""

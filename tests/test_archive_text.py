@@ -15,7 +15,7 @@ import zipfile
 import pytest
 
 from geoparser_spark.operators import archive_text as at
-from geoparser_spark.operators.extract import extract_doc_spans
+from geoparser_spark.operators.extract import extract_doc_spans, extract_span
 
 
 def _b64(raw: bytes) -> str:
@@ -47,7 +47,7 @@ class TestZip:
             ("b.txt", b"second  entry text"),
             ("a.txt", b"first entry\ntext"),
         ])
-        spans = at.extract_zip_b64_spans(_b64(raw))
+        spans = extract_span("zip_bytes", _b64(raw))
         # zip preserves write order, not name order
         assert spans == [
             ("text", "second entry text", None),
@@ -57,7 +57,7 @@ class TestZip:
     def test_html_entry_uses_html_extractor(self):
         html = b"<html><body><p>Hello archive world</p></body></html>"
         raw = _zip_bytes([("page.html", html)])
-        spans = at.extract_zip_b64_spans(_b64(raw))
+        spans = extract_span("zip_bytes", _b64(raw))
         assert any("Hello archive world" in (t or "") for _, t, _ in spans)
 
     def test_docx_entry_round_trips(self):
@@ -71,7 +71,7 @@ class TestZip:
         )
         docx = _zip_bytes([("word/document.xml", doc_xml)])
         outer = _zip_bytes([("report.docx", docx)])
-        spans = at.extract_zip_b64_spans(_b64(outer))
+        spans = extract_span("zip_bytes", _b64(outer))
         assert ("text", "Nested office payload", None) in spans
 
     def test_directories_skipped(self):
@@ -79,71 +79,72 @@ class TestZip:
         with zipfile.ZipFile(buf, "w") as zf:
             zf.writestr("dir/", b"")
             zf.writestr("dir/x.txt", b"inside dir")
-        spans = at.extract_zip_b64_spans(_b64(buf.getvalue()))
+        spans = extract_span("zip_bytes", _b64(buf.getvalue()))
         assert spans == [("text", "inside dir", None)]
 
     def test_unknown_suffix_is_text_passthrough(self):
         raw = _zip_bytes([("notes.log", b"plain  log line")])
-        spans = at.extract_zip_b64_spans(_b64(raw))
+        spans = extract_span("zip_bytes", _b64(raw))
         assert spans == [("text", "plain log line", None)]
 
     def test_damaged_zip_degrades_to_empty(self):
-        assert at.extract_zip_b64_spans(_b64(b"PK\x03\x04garbage")) == []
-        assert at.extract_zip_b64_spans("!!!not-base64!!!") == []
+        assert extract_span("zip_bytes", _b64(b"PK\x03\x04garbage")) == []
+        assert extract_span("zip_bytes", "!!!not-base64!!!") == []
 
 
 class TestTarAndGzip:
     def test_tar_stream_order(self):
         raw = _tar_bytes([("z.txt", b"zz"), ("a.txt", b"aa")])
-        spans = at.extract_tar_b64_spans(_b64(raw))
+        spans = extract_span("tar_bytes", _b64(raw))
         assert spans == [("text", "zz", None), ("text", "aa", None)]
 
     def test_tar_gz_sniffed(self):
         raw = _tar_bytes([("doc.txt", b"compressed tar member")], gz=True)
-        spans = at.extract_tar_b64_spans(_b64(raw))
+        spans = extract_span("tar_bytes", _b64(raw))
         assert spans == [("text", "compressed tar member", None)]
 
     def test_gzip_single_member(self):
         raw = gzip.compress(b"gzipped body text")
-        spans = at.extract_gz_b64_spans(_b64(raw))
+        spans = extract_span("gz_bytes", _b64(raw))
         assert spans == [("text", "gzipped body text", None)]
 
     def test_gzip_inner_name_dispatch(self):
+        # a gzip entry is dispatched by its own name minus ``.gz``
         html = b"<html><body><p>gz html</p></body></html>"
-        raw = gzip.compress(html)
-        spans = at.extract_gz_b64_spans(_b64(raw), inner_name="page.html")
+        raw = _zip_bytes([("page.html.gz", gzip.compress(html))])
+        spans = extract_span("zip_bytes", _b64(raw))
         assert any("gz html" in (t or "") for _, t, _ in spans)
 
     def test_damaged_tar_and_gz_degrade(self):
-        assert at.extract_tar_b64_spans(_b64(b"\x00" * 100)) == []
-        assert at.extract_gz_b64_spans(_b64(b"\x1f\x8bbroken")) == []
+        assert extract_span("tar_bytes", _b64(b"\x00" * 100)) == []
+        assert extract_span("gz_bytes", _b64(b"\x1f\x8bbroken")) == []
 
 
 class TestNestingAndBudget:
     def test_zip_in_zip_recurses_once(self):
         inner = _zip_bytes([("deep.txt", b"level two")])
         outer = _zip_bytes([("inner.zip", inner)])
-        spans = at.extract_zip_b64_spans(_b64(outer))
+        spans = extract_span("zip_bytes", _b64(outer))
         assert spans == [("text", "level two", None)]
 
     def test_depth_cap_stops_third_level(self):
         l3 = _zip_bytes([("core.txt", b"level three")])
         l2 = _zip_bytes([("l3.zip", l3), ("seen.txt", b"level two ok")])
         l1 = _zip_bytes([("l2.zip", l2)])
-        spans = at.extract_zip_b64_spans(_b64(l1))
+        spans = extract_span("zip_bytes", _b64(l1))
         # level-2 text survives; level-3 archive is depth-capped, silently
         assert spans == [("text", "level two ok", None)]
 
     def test_tar_gz_inside_zip(self):
         tgz = _tar_bytes([("member.txt", b"tar in zip")], gz=True)
         outer = _zip_bytes([("bundle.tar.gz", tgz)])
-        spans = at.extract_zip_b64_spans(_b64(outer))
+        spans = extract_span("zip_bytes", _b64(outer))
         assert spans == [("text", "tar in zip", None)]
 
     def test_entry_count_cap(self, monkeypatch):
         monkeypatch.setattr(at, "MAX_ENTRIES", 3)
         raw = _zip_bytes([(f"e{i}.txt", b"x %d" % i) for i in range(6)])
-        spans = at.extract_zip_b64_spans(_b64(raw))
+        spans = extract_span("zip_bytes", _b64(raw))
         assert len(spans) == 3
 
     def test_member_byte_cap_skips_bomb(self, monkeypatch):
@@ -152,7 +153,7 @@ class TestNestingAndBudget:
             ("bomb.txt", b"A" * 4096),
             ("ok.txt", b"small survives"),
         ])
-        spans = at.extract_zip_b64_spans(_b64(raw))
+        spans = extract_span("zip_bytes", _b64(raw))
         assert spans == [("text", "small survives", None)]
 
     def test_lying_zip_header_read_cap(self, monkeypatch):
@@ -162,13 +163,62 @@ class TestNestingAndBudget:
         raw = _zip_bytes([("ok.txt", b"fine")])
         # corrupt the declared size to something tiny won't matter for
         # the happy path; this pins that the cap path reads bounded
-        spans = at.extract_zip_b64_spans(_b64(raw))
+        spans = extract_span("zip_bytes", _b64(raw))
         assert spans == [("text", "fine", None)]
 
     def test_gzip_bomb_capped(self, monkeypatch):
         monkeypatch.setattr(at, "MAX_MEMBER_BYTES", 1024)
         raw = gzip.compress(b"B" * (1 << 20))
-        assert at.extract_gz_b64_spans(_b64(raw)) == []
+        assert extract_span("gz_bytes", _b64(raw)) == []
+
+
+def _patch_central_dir(raw: bytes, offset: int, value: bytes) -> bytes:
+    """Overwrite a field of the (single) central-directory header."""
+    cd = raw.index(b"PK\x01\x02")
+    return raw[:cd + offset] + value + raw[cd + offset + len(value):]
+
+
+class TestDamagedContainersDegrade:
+    """Container failures the stdlib raises as errors of its own kinds
+    (zlib.error, RuntimeError, NotImplementedError, EOFError) degrade
+    to [] at the dispatch boundary instead of escaping the Arrow task."""
+
+    def test_truncated_gzip_body(self):
+        raw = gzip.compress(b"".join(b"line %d\n" % i for i in range(2000)))
+        assert extract_span("gz_bytes", _b64(raw[: len(raw) // 2])) == []
+
+    def test_corrupt_gzip_deflate_body(self):
+        raw = gzip.compress(b"".join(b"line %d\n" % i for i in range(2000)))
+        bad = raw[:20] + bytes(b ^ 0xFF for b in raw[20:60]) + raw[60:]
+        assert extract_span("gz_bytes", _b64(bad)) == []
+
+    def test_password_protected_zip_entry(self):
+        raw = _zip_bytes([("secret.txt", b"encrypted body")])
+        # general-purpose flag bit 0: entry is encrypted
+        raw = _patch_central_dir(raw, 8, b"\x01\x00")
+        with pytest.raises(RuntimeError):  # what the stdlib raises
+            with zipfile.ZipFile(io.BytesIO(raw)) as zf:
+                zf.read("secret.txt")
+        assert extract_span("zip_bytes", _b64(raw)) == []
+
+    def test_unsupported_compression_method(self):
+        raw = _zip_bytes([("odd.txt", b"unknown codec body")])
+        raw = _patch_central_dir(raw, 10, (97).to_bytes(2, "little"))
+        with pytest.raises(NotImplementedError):
+            with zipfile.ZipFile(io.BytesIO(raw)) as zf:
+                zf.read("odd.txt")
+        assert extract_span("zip_bytes", _b64(raw)) == []
+
+    def test_corrupt_nested_zip_keeps_siblings(self):
+        raw = _zip_bytes([
+            ("good.txt", b"first good entry"),
+            ("bad.zip", b"PK\x03\x04 this is not a zip archive"),
+            ("good2.txt", b"second good entry"),
+        ])
+        assert extract_span("zip_bytes", _b64(raw)) == [
+            ("text", "first good entry", None),
+            ("text", "second good entry", None),
+        ]
 
 
 class TestDispatchIntegration:

@@ -12,7 +12,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from geoparser_spark.operators.audio_meta import (
-    extract_audio_b64_spans,
     extract_audio_spans,
     make_mini_flac,
     make_mini_wav,
@@ -20,7 +19,7 @@ from geoparser_spark.operators.audio_meta import (
     parse_flac,
     parse_wav,
 )
-from geoparser_spark.operators.extract import extract_doc_spans
+from geoparser_spark.operators.extract import extract_doc_spans, extract_span
 
 
 def test_wav_params_and_duration_floor():
@@ -76,7 +75,7 @@ def test_audio_degrade_contract():
     assert parse_audio_meta(b"RIFFxxxx") is None
     assert parse_audio_meta(b"fLa") is None
     assert extract_audio_spans(b"\x00" * 64) == []
-    assert extract_audio_b64_spans("not base64 !!!") == []
+    assert extract_span("audio_bytes", "not base64 !!!") == []
 
 
 def test_wav_truncated_data_still_reports_nominal_duration():
@@ -321,6 +320,14 @@ def test_mp3_frame_walk_duration_and_params():
     assert parse_mp3(make_mini_mp3(3, stereo=False))[1] == 1
 
 
+def test_mp3_id3v1_year_surfaces():
+    from geoparser_spark.operators.audio_meta import make_mini_mp3, parse_mp3
+
+    blob = bytearray(make_mini_mp3(4, id3v1=("T1", "A1", "Al", "c0mment")))
+    blob[-128 + 93:-128 + 97] = b"1999"      # ID3v1 year field
+    assert parse_mp3(bytes(blob))[4] == ["T1", "A1", "Al", "1999", "c0mment"]
+
+
 def test_mp3_id3_tags_in_byte_order():
     from geoparser_spark.operators.audio_meta import (
         extract_audio_spans,
@@ -508,6 +515,21 @@ def test_wav_ms_adpcm_validation():
     blob[data_at] = 7
     with pytest.raises(ValueError, match="predictor index"):
         decode_wav_pcm(bytes(blob))
+
+
+def test_wav_ms_adpcm_rejects_non_positive_idelta():
+    from geoparser_spark.operators.audio_meta import (
+        decode_wav_pcm,
+        make_wav_ms_adpcm,
+    )
+
+    s = np.zeros((40, 1), dtype=np.int64)
+    for idelta in (0, -300):
+        blob = bytearray(make_wav_ms_adpcm(s, 8000))
+        data_at = blob.index(b"data") + 8      # predictor, then idelta
+        blob[data_at + 1:data_at + 3] = struct.pack("<h", idelta)
+        with pytest.raises(ValueError, match="idelta"):
+            decode_wav_pcm(bytes(blob))
 
 
 def test_wav_ima_adpcm_validation():

@@ -12,6 +12,7 @@ import struct
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from geoparser_spark.operators.extract import extract_span
 from geoparser_spark.operators.biff_legacy import (
     _REC_BOF,
     _REC_EOF,
@@ -19,9 +20,7 @@ from geoparser_spark.operators.biff_legacy import (
     _REC_RK,
     _make_cfb,
     _rec,
-    extract_ppt_b64_text_blocks,
     extract_ppt_text_blocks,
-    extract_xls_b64_text_blocks,
     extract_xls_text_blocks,
     make_mini_ppt,
     make_mini_xls,
@@ -104,22 +103,22 @@ def test_ppt_paragraph_marks_split():
 
 def test_b64_paths_and_damage():
     xls = make_mini_xls([["x"]])
-    assert extract_xls_b64_text_blocks(
-        base64.b64encode(xls).decode()) == ["x"]
-    assert extract_xls_b64_text_blocks("!!!not-base64!!!") == []
-    assert extract_ppt_b64_text_blocks("") == []
+    assert extract_span(
+        "xls_bytes", base64.b64encode(xls).decode()) == [("text", "x", None)]
+    assert extract_span("xls_bytes", "!!!not-base64!!!") == []
+    assert extract_span("ppt_bytes", "") == []
 
 
 @settings(max_examples=60, deadline=None)
 @given(st.binary(max_size=4096))
 def test_xls_totality_on_garbage(raw):
-    assert isinstance(extract_xls_text_blocks(raw), list)
+    assert isinstance(extract_span("xls_bytes", raw), list)
 
 
 @settings(max_examples=60, deadline=None)
 @given(st.binary(max_size=4096))
 def test_ppt_totality_on_garbage(raw):
-    assert isinstance(extract_ppt_text_blocks(raw), list)
+    assert isinstance(extract_span("ppt_bytes", raw), list)
 
 
 @settings(max_examples=30, deadline=None)
@@ -139,7 +138,7 @@ def test_xls_roundtrip_property(rows):
 @given(st.binary(min_size=0, max_size=200))
 def test_xls_truncation_totality(tail):
     xls = make_mini_xls([["alpha beta", "gamma"]])
-    assert isinstance(extract_xls_text_blocks(xls[:300] + tail), list)
+    assert isinstance(extract_span("xls_bytes", xls[:300] + tail), list)
 
 
 def test_fixture_writer_rejects_oversize_record():

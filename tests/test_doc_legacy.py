@@ -5,9 +5,9 @@ from __future__ import annotations
 import base64
 import struct
 
+from geoparser_spark.operators.extract import extract_span
 from geoparser_spark.operators.doc_legacy import (
     _cfb_streams,
-    extract_doc_b64_text_blocks,
     extract_doc_text_blocks,
     make_mini_doc,
 )
@@ -28,7 +28,7 @@ def test_doc_cp1252_characters():
 
 def test_doc_b64_roundtrip():
     b64 = base64.b64encode(make_mini_doc(["payload"])).decode()
-    assert extract_doc_b64_text_blocks(b64) == ["payload"]
+    assert extract_span("doc_bytes", b64) == [("text", "payload", None)]
 
 
 def test_cfb_streams_both_paths():
@@ -65,7 +65,7 @@ def test_doc_utf16_piece():
 
 def test_doc_damage_degrades_empty():
     assert extract_doc_text_blocks(b"not ole at all") == []
-    assert extract_doc_b64_text_blocks("!!!") == []
+    assert extract_span("doc_bytes", "!!!") == []
     # valid magic, truncated body
     assert extract_doc_text_blocks(
         b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1" + b"\x00" * 700

@@ -8,9 +8,9 @@ import zlib
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from geoparser_spark.operators.extract import extract_span
 from geoparser_spark.operators.extract import extract_doc_spans
 from geoparser_spark.operators.image_meta import (
-    extract_image_b64_spans,
     extract_image_spans,
     make_mini_gif,
     make_mini_jpeg,
@@ -51,7 +51,7 @@ def test_xml_no_children_single_block():
 def test_xml_degrade_contract():
     assert extract_xml_text_blocks("") == []
     assert extract_xml_text_blocks("plain text") == []
-    assert extract_xml_text_blocks("<a><b></a>") == []  # malformed
+    assert extract_span("xml", "<a><b></a>") == []  # malformed
     assert extract_xml_text_blocks(
         '<!DOCTYPE a [<!ENTITY x "y">]><a>&x;</a>') == []  # entity guard
 
@@ -113,7 +113,7 @@ def test_gif_comment_spans_multiple_subblocks():
 def test_image_degrade_contract():
     assert extract_image_spans(b"") == []
     assert extract_image_spans(b"garbage bytes") == []
-    assert extract_image_b64_spans("!!! not base64") == []
+    assert extract_span("image_bytes", "!!! not base64") == []
     # truncated PNG: signature + half an IHDR
     assert parse_image_meta(make_mini_png(2, 2)[:12]) is None
 
@@ -172,7 +172,7 @@ def test_image_parser_never_throws_on_corrupt_headers(raw, sig):
 @settings(max_examples=100, deadline=None)
 @given(st.text(min_size=0, max_size=300))
 def test_xml_extractor_never_throws_on_random_text(s):
-    assert isinstance(extract_xml_text_blocks(s), list)
+    assert isinstance(extract_span("xml", s), list)
 
 
 def test_xml_entity_guard_not_evaded_by_long_comment_prolog():

@@ -4,8 +4,8 @@ from __future__ import annotations
 
 import base64
 
+from geoparser_spark.operators.extract import extract_span
 from geoparser_spark.operators.office_text import (
-    extract_docx_b64_text_blocks,
     extract_docx_text_blocks,
     extract_rtf_text_blocks,
     make_mini_docx,
@@ -42,8 +42,8 @@ def test_docx_multiple_runs_per_paragraph():
 
 
 def test_docx_damage_degrades_empty():
-    assert extract_docx_text_blocks(b"not a zip at all") == []
-    assert extract_docx_b64_text_blocks("!!!") == []
+    assert extract_span("docx_bytes", b"not a zip at all") == []
+    assert extract_span("docx_bytes", "!!!") == []
     # zip without word/document.xml
     import io
     import zipfile
@@ -51,12 +51,12 @@ def test_docx_damage_degrades_empty():
     buf = io.BytesIO()
     with zipfile.ZipFile(buf, "w") as z:
         z.writestr("other.xml", "<x/>")
-    assert extract_docx_text_blocks(buf.getvalue()) == []
+    assert extract_span("docx_bytes", buf.getvalue()) == []
 
 
 def test_docx_b64_roundtrip():
     b64 = base64.b64encode(make_mini_docx(["payload text"])).decode()
-    assert extract_docx_b64_text_blocks(b64) == ["payload text"]
+    assert extract_span("docx_bytes", b64) == [("text", "payload text", None)]
 
 
 def test_rtf_basic_paragraphs():
@@ -185,7 +185,6 @@ def test_pptx_runs_breaks_entities_damage():
     import zipfile
 
     from geoparser_spark.operators.office_text import (
-        extract_pptx_b64_text_blocks,
         extract_pptx_text_blocks,
         make_mini_pptx,
     )
@@ -199,8 +198,8 @@ def test_pptx_runs_breaks_entities_damage():
         )
     # runs concatenate, <a:br/> becomes whitespace, no double-unescape
     assert extract_pptx_text_blocks(buf.getvalue()) == ["Hel lo &lt; x"]
-    assert extract_pptx_text_blocks(b"not a zip") == []
-    assert extract_pptx_b64_text_blocks("!!!") == []
+    assert extract_span("pptx_bytes", b"not a zip") == []
+    assert extract_span("pptx_bytes", "!!!") == []
     assert extract_pptx_text_blocks(make_mini_pptx([[]])) == []
 
 
@@ -246,12 +245,11 @@ def test_xlsx_damage_and_missing_parts():
     import zipfile
 
     from geoparser_spark.operators.office_text import (
-        extract_xlsx_b64_text_blocks,
         extract_xlsx_text_blocks,
     )
 
-    assert extract_xlsx_text_blocks(b"nope") == []
-    assert extract_xlsx_b64_text_blocks("!!!") == []
+    assert extract_span("xlsx_bytes", b"nope") == []
+    assert extract_span("xlsx_bytes", "!!!") == []
     # sheet referencing a shared-string index with NO sharedStrings part
     buf = io.BytesIO()
     with zipfile.ZipFile(buf, "w") as z:
@@ -293,13 +291,8 @@ def test_epub_fallback_without_container():
 
 
 def test_epub_damage_degrades_empty():
-    from geoparser_spark.operators.office_text import (
-        extract_epub_b64_text_blocks,
-        extract_epub_text_blocks,
-    )
-
-    assert extract_epub_text_blocks(b"not a zip") == []
-    assert extract_epub_b64_text_blocks("!!!") == []
+    assert extract_span("epub_bytes", b"not a zip") == []
+    assert extract_span("epub_bytes", "!!!") == []
 
 
 # -------------------------------------------------------------------- ODT
@@ -336,12 +329,9 @@ def test_odt_damage_degrades_empty():
     import io
     import zipfile
 
-    from geoparser_spark.operators.office_text import (
-        extract_odt_b64_text_blocks, extract_odt_text_blocks)
-
-    assert extract_odt_text_blocks(b"not a zip") == []
+    assert extract_span("odt_bytes", b"not a zip") == []
     buf = io.BytesIO()
     with zipfile.ZipFile(buf, "w") as z:
         z.writestr("other.xml", b"<x/>")   # content.xml missing
-    assert extract_odt_text_blocks(buf.getvalue()) == []
-    assert extract_odt_b64_text_blocks("!!!not-base64!!!") == []
+    assert extract_span("odt_bytes", buf.getvalue()) == []
+    assert extract_span("odt_bytes", "!!!not-base64!!!") == []

@@ -2,8 +2,8 @@
 
 import base64
 
+from geoparser_spark.operators.extract import extract_span
 from geoparser_spark.operators.pdf_text import (
-    extract_pdf_b64_text_blocks,
     extract_pdf_text_blocks,
     make_mini_pdf,
 )
@@ -94,13 +94,13 @@ def test_multibyte_hex_degrades_to_raw_bytes():
 
 def test_garbage_is_empty_not_crash():
     assert extract_pdf_text_blocks(b"\x00\x01 not a pdf") == []
-    assert extract_pdf_b64_text_blocks("!!!not-base64!!!") == []
+    assert extract_span("pdf_bytes", "!!!not-base64!!!") == []
 
 
 def test_b64_roundtrip():
     pdf = make_mini_pdf([["abc"]])
     b64 = base64.b64encode(pdf).decode()
-    assert extract_pdf_b64_text_blocks(b64) == ["abc"]
+    assert extract_span("pdf_bytes", b64) == [("text", "abc", None)]
 
 
 # ------------------------------------------------ ToUnicode / Identity-H

@@ -9,11 +9,15 @@ import base64
 
 from hypothesis import given, settings, strategies as st
 
-from geoparser_spark.operators.extract import extract_doc_spans
+from geoparser_spark.operators.extract import extract_doc_spans, extract_span
 from geoparser_spark.operators.html_main import extract_html_blocks
-from geoparser_spark.operators.pdf_text import extract_pdf_b64_text_blocks
 
 _SETTINGS = dict(max_examples=80, deadline=None)
+
+
+def _texts(kind: str, payload) -> list:
+    """Text of one span through its extract registry entry."""
+    return [t for _, t, _ in extract_span(kind, payload)]
 
 # text that may contain markup-ish noise
 _noise_text = st.text(
@@ -44,7 +48,7 @@ def test_html_extract_total_and_deterministic(html):
 @settings(**_SETTINGS)
 def test_pdf_extract_never_crashes_on_garbage(raw):
     b64 = base64.b64encode(raw).decode()
-    out = extract_pdf_b64_text_blocks(b64)
+    out = _texts("pdf_bytes", b64)
     assert isinstance(out, list)
     assert all(isinstance(b, str) for b in out)
 
@@ -52,9 +56,7 @@ def test_pdf_extract_never_crashes_on_garbage(raw):
 @given(st.binary(max_size=300))
 @settings(**_SETTINGS)
 def test_docx_extract_never_crashes_on_garbage(raw):
-    from geoparser_spark.operators.office_text import extract_docx_text_blocks
-
-    out = extract_docx_text_blocks(raw)
+    out = _texts("docx_bytes", raw)
     assert isinstance(out, list) and all(isinstance(b, str) for b in out)
 
 
@@ -79,11 +81,9 @@ def test_docx_roundtrip_preserves_paragraphs(paras):
 @given(st.binary(max_size=600))
 @settings(**_SETTINGS)
 def test_doc_extract_never_crashes_on_garbage(raw):
-    from geoparser_spark.operators.doc_legacy import extract_doc_text_blocks
-
     # raw garbage AND garbage wearing the CFB magic header
     for blob in (raw, b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1" + raw):
-        out = extract_doc_text_blocks(blob)
+        out = _texts("doc_bytes", blob)
         assert isinstance(out, list) and all(isinstance(b, str) for b in out)
 
 
@@ -111,13 +111,8 @@ def test_doc_roundtrip_preserves_paragraphs(paras):
 @given(st.binary(max_size=300))
 @settings(**_SETTINGS)
 def test_pptx_xlsx_extract_never_crash_on_garbage(raw):
-    from geoparser_spark.operators.office_text import (
-        extract_pptx_text_blocks,
-        extract_xlsx_text_blocks,
-    )
-
-    for fn in (extract_pptx_text_blocks, extract_xlsx_text_blocks):
-        out = fn(raw)
+    for kind in ("pptx_bytes", "xlsx_bytes"):
+        out = _texts(kind, raw)
         assert isinstance(out, list) and all(isinstance(b, str) for b in out)
 
 
@@ -188,9 +183,7 @@ def test_doc_spans_dense_order_and_offset_invariance(spans, rnd):
 @given(st.binary(max_size=300))
 @settings(**_SETTINGS)
 def test_odt_extract_never_crashes_on_garbage(raw):
-    from geoparser_spark.operators.office_text import extract_odt_text_blocks
-
-    out = extract_odt_text_blocks(raw)
+    out = _texts("odt_bytes", raw)
     assert isinstance(out, list) and all(isinstance(b, str) for b in out)
 
 
