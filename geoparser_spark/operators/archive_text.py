@@ -16,8 +16,10 @@ Contracts:
   * degrade: this module only walks; every entry — a nested archive
     included — is dispatched through extract.extract_span, the one
     degrade boundary, so a damaged entry yields ``[]`` alone and its
-    siblings keep their spans; a container that cannot be opened or
-    read at all degrades to ``[]`` at the same boundary;
+    siblings keep their spans; a member whose own read fails (an
+    encrypted or bad-CRC zip entry, a truncated tar body) is dropped
+    alone; a container that cannot be opened or walked at all degrades
+    to ``[]`` at that boundary;
   * deterministic: entries are walked in the container's own order
     (zip central-directory order, tar stream order), which is part of
     the file's bytes, never filesystem or hash order;
@@ -34,8 +36,11 @@ from __future__ import annotations
 
 import gzip
 import io
+import logging
 import tarfile
 import zipfile
+
+_log = logging.getLogger(__name__)
 
 #: guards — sized so a hostile archive cannot blow an Arrow task's heap
 MAX_ENTRIES = 512          # entries walked per archive (incl. nested)
@@ -125,9 +130,13 @@ def zip_spans(raw: bytes, depth: int = 0,
                 continue
             if not budget.admit(info.file_size):
                 continue
-            with zf.open(info) as f:
-                # cap the actual read too — file_size is attacker data
-                member = f.read(MAX_MEMBER_BYTES + 1)
+            try:
+                with zf.open(info) as f:
+                    # cap the actual read too — file_size is attacker data
+                    member = f.read(MAX_MEMBER_BYTES + 1)
+            except Exception:  # encrypted, bad CRC, unknown method
+                _log.debug("zip member %r dropped", info.filename, exc_info=True)
+                continue
             if len(member) > MAX_MEMBER_BYTES:
                 continue
             out.extend(_entry_spans(info.filename, member, depth, budget))
@@ -145,10 +154,14 @@ def tar_spans(raw: bytes, depth: int = 0,
                 continue
             if not budget.admit(member.size):
                 continue
-            f = tf.extractfile(member)
-            if f is None:
+            try:
+                f = tf.extractfile(member)
+                if f is None:
+                    continue
+                data = f.read(MAX_MEMBER_BYTES + 1)
+            except Exception:  # truncated or corrupt member body
+                _log.debug("tar member %r dropped", member.name, exc_info=True)
                 continue
-            data = f.read(MAX_MEMBER_BYTES + 1)
             if len(data) > MAX_MEMBER_BYTES:
                 continue
             out.extend(_entry_spans(member.name, data, depth, budget))

@@ -38,8 +38,12 @@ columns incl. geonameid; the output locations array is array_sort'ed on
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+_log = logging.getLogger(__name__)
 
 # 5 covers GeoNames' long official names ("Islamic Republic of Iran",
 # "United States of America") that the reference's Lucene index matches
@@ -160,7 +164,13 @@ def candidate_mentions(texts: DataFrame, surfaces: DataFrame,
     measured both ways at 12M synthetic surfaces in
     BENCH/GAZETTEER_SCALE.md, cutover pinned by a plan test."""
     if broadcast_surfaces == "auto":
-        broadcast_surfaces = surfaces.count() <= BROADCAST_SURFACE_ROW_BUDGET
+        n_surfaces = surfaces.count()
+        broadcast_surfaces = n_surfaces <= BROADCAST_SURFACE_ROW_BUDGET
+        _log.info(
+            "candidate_mentions: broadcast_surfaces='auto' counted %d "
+            "surfaces against a budget of %d: %s tag join", n_surfaces,
+            BROADCAST_SURFACE_ROW_BUDGET,
+            "broadcast" if broadcast_surfaces else "shuffled")
     stoks = F.split(F.col("surface"), " ")
     surf = surfaces.select(
         "*",

@@ -3,7 +3,8 @@
 Replaces the reference's hand-rolled batch-state machinery:
   * resume  — ``rows_processed = GetIndexSize(core)`` offset counter
               (reference: geoparser_app/views.py:322-339) becomes a
-              per-partition manifest table + left-anti join.
+              per-partition manifest table; the done set is collected
+              to the driver and the rest selected by a part_id filter.
   * skew    — the reference has none (a mega-document stalls its
               sequential loop, views.py:357); here mega-docs are split
               into chunk rows, processed, and reassembled in order.
@@ -26,6 +27,7 @@ Design notes for the 10^12-doc scale point:
 
 from __future__ import annotations
 
+import logging
 import os
 import time
 from collections.abc import Callable
@@ -34,6 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_LOGICAL_PARTS = 256
+
+_log = logging.getLogger(__name__)
 
 
 # --------------------------------------------------------------- skew
@@ -182,19 +186,46 @@ def _append_ref(df: DataFrame, ref: str) -> None:
     df.write.mode("append").parquet(ref)
 
 
+#: what Spark raises for a manifest that holds no committed rows yet: a
+#: missing path or table, or a directory with no data files (a crash
+#: during the first manifest append leaves only ``_temporary/``)
+_MISSING_REF_CONDITIONS = (
+    "PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
 def read_done_parts(spark: SparkSession, manifest_dir: str) -> DataFrame:
     """Manifest partitions already completed (any run_id — restartable
     across job submissions, like the reference's resume offset but
-    partition-grained)."""
+    partition-grained).
+
+    Only a manifest that holds no committed rows yet — a missing path
+    or catalog table, or a directory without data files — reads as
+    "nothing done".  Any other failure (an unreadable or corrupt
+    manifest) raises: treating it as empty would rerun every partition
+    and append a second 'done' row for each."""
+    from pyspark.errors import AnalysisException
+
     try:
         m = _read_ref(spark, manifest_dir)
-    except Exception:
+    except AnalysisException as e:
+        if e.getCondition() not in _MISSING_REF_CONDITIONS:
+            raise
         return spark.createDataFrame([], "part_id int")
     return (
         m.where(F.col("status") == "done")
         .select(F.col("partition_id").alias("part_id"))
         .distinct()
     )
+
+
+def _parts_filter(done: list[int], todo: list[int]) -> F.Column | None:
+    """``part_id`` predicate selecting the todo partitions, written with
+    whichever of the two lists is shorter; None when nothing is done."""
+    if not done:
+        return None
+    if len(done) < len(todo):
+        return ~F.col("part_id").isin(done)
+    return F.col("part_id").isin(todo)
 
 
 def resumable_stage(
@@ -212,6 +243,12 @@ def resumable_stage(
     manifest rows with lineage metrics.  Returns the full output
     DataFrame (all completed partitions).
 
+    The done set (at most ``n_parts`` ints) is collected to the driver
+    once.  When every partition is done the written output is returned
+    as is: no source scan, no stage, no write, no manifest rows.
+    Otherwise the todo rows are a plain ``part_id`` filter, so building
+    the stage's plan executes nothing.
+
     Crash-safety: data is written with dynamic partition overwrite
     BEFORE its manifest rows are appended.  A crash in between leaves
     orphan data that the next run simply overwrites — at-least-once
@@ -219,9 +256,20 @@ def resumable_stage(
     manifest_dir = manifest_dir or os.path.join(output_dir + "_manifest")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-    docs_p = with_part_id(docs, key, n_parts)
-    done = read_done_parts(spark, manifest_dir)
-    todo = docs_p.join(F.broadcast(done), "part_id", "left_anti")
+    done_set = {r.part_id for r in read_done_parts(spark, manifest_dir).collect()}
+    done_parts = [p for p in range(n_parts) if p in done_set]
+    todo_parts = [p for p in range(n_parts) if p not in done_set]
+    _log.info(
+        "resumable_stage %s: %d of %d logical partitions done, %d to do%s",
+        output_dir, len(done_parts), n_parts, len(todo_parts),
+        "" if todo_parts else " (short-circuit: nothing to run)")
+    if not todo_parts:
+        return _read_ref(spark, output_dir).drop("part_id")
+    pending = _parts_filter(done_parts, todo_parts)
+
+    todo = with_part_id(docs, key, n_parts)
+    if pending is not None:
+        todo = todo.where(pending)
 
     rows_in = todo.groupBy("part_id").agg(F.count("*").alias("rows_in"))
     t0 = time.monotonic()
@@ -229,21 +277,23 @@ def resumable_stage(
     _write_partitioned(out, output_dir)
     wall_ms = int((time.monotonic() - t0) * 1000)
 
-    written = _read_ref(spark, output_dir).join(
-        todo.select("part_id").distinct(), "part_id", "left_semi"
-    )
+    # the part_id predicate prunes the output's partition directories;
+    # the inner join keeps only partitions this run's input holds
+    written = _read_ref(spark, output_dir)
+    if pending is not None:
+        written = written.where(pending)
     manifest = (
         written.groupBy("part_id")
         .agg(
             F.count("*").alias("rows_out"),
             _spans_checksum_col().alias("checksum"),
         )
-        .join(rows_in, "part_id", "left")
+        .join(rows_in, "part_id")
         .select(
             F.lit(run_id).alias("run_id"),
             "part_id",
             F.lit("done").alias("status"),
-            F.coalesce("rows_in", F.lit(0)).alias("rows_in"),
+            "rows_in",
             "rows_out",
             "checksum",
             F.lit(wall_ms).alias("wall_ms"),

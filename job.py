@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import logging
 import os
 import sys
 import time
@@ -322,4 +323,8 @@ def main(argv: list[str] | None = None) -> int:
 
 
 if __name__ == "__main__":
+    # the engine's runtime decisions (resume done/todo counts, tag-join
+    # plan, redistribute fallback) go to stderr; stdout keeps the JSON
+    logging.basicConfig(format="%(asctime)s %(levelname)s %(name)s: %(message)s")
+    logging.getLogger("geoparser_spark").setLevel(logging.INFO)
     sys.exit(main())

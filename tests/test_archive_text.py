@@ -172,16 +172,20 @@ class TestNestingAndBudget:
         assert extract_span("gz_bytes", _b64(raw)) == []
 
 
-def _patch_central_dir(raw: bytes, offset: int, value: bytes) -> bytes:
-    """Overwrite a field of the (single) central-directory header."""
-    cd = raw.index(b"PK\x01\x02")
+def _patch_central_dir(raw: bytes, offset: int, value: bytes,
+                       entry: int = 0) -> bytes:
+    """Overwrite a field of the ``entry``-th central-directory header."""
+    cd = -1
+    for _ in range(entry + 1):
+        cd = raw.index(b"PK\x01\x02", cd + 1)
     return raw[:cd + offset] + value + raw[cd + offset + len(value):]
 
 
 class TestDamagedContainersDegrade:
     """Container failures the stdlib raises as errors of its own kinds
     (zlib.error, RuntimeError, NotImplementedError, EOFError) degrade
-    to [] at the dispatch boundary instead of escaping the Arrow task."""
+    to [] at the dispatch boundary instead of escaping the Arrow task;
+    a member whose own read fails is dropped and its siblings kept."""
 
     def test_truncated_gzip_body(self):
         raw = gzip.compress(b"".join(b"line %d\n" % i for i in range(2000)))
@@ -208,6 +212,25 @@ class TestDamagedContainersDegrade:
             with zipfile.ZipFile(io.BytesIO(raw)) as zf:
                 zf.read("odd.txt")
         assert extract_span("zip_bytes", _b64(raw)) == []
+
+    @pytest.mark.parametrize("offset, value, error", [
+        (8, b"\x01\x00", RuntimeError),            # encrypted (flag bit 0)
+        (16, b"\x00\x00\x00\x00", zipfile.BadZipFile),  # bad CRC-32
+    ])
+    def test_unreadable_member_keeps_siblings(self, offset, value, error):
+        raw = _zip_bytes([
+            ("good.txt", b"first good entry"),
+            ("secret.txt", b"this member cannot be read"),
+            ("good2.txt", b"second good entry"),
+        ])
+        raw = _patch_central_dir(raw, offset, value, entry=1)
+        with pytest.raises(error):
+            with zipfile.ZipFile(io.BytesIO(raw)) as zf:
+                zf.read("secret.txt")
+        assert extract_span("zip_bytes", _b64(raw)) == [
+            ("text", "first good entry", None),
+            ("text", "second good entry", None),
+        ]
 
     def test_corrupt_nested_zip_keeps_siblings(self):
         raw = _zip_bytes([

@@ -4,8 +4,11 @@ invariance, mega-doc splitting, geotag fixtures, resume.
 
 from __future__ import annotations
 
+import logging
+import os
 import shutil
 import tempfile
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,6 +22,7 @@ from geoparser_spark.operators.geotag import (
     select_primary,
 )
 from geoparser_spark.plans.runtime import (
+    read_done_parts,
     reassemble_chunks,
     resumable_stage,
     salted_repartition,
@@ -148,6 +152,135 @@ def test_resumable_stage_on_catalog_ref(spark, docs, expected):
     finally:
         spark.sql("DROP TABLE IF EXISTS gp_resume_out")
         spark.sql("DROP TABLE IF EXISTS gp_resume_man")
+
+
+def _never_stage(df):
+    raise AssertionError("stage invoked on a fully-done resume")
+
+
+def _output_files(spark, ref: str) -> dict[str, int]:
+    """{file: mtime_ns} of everything a stage output holds on disk."""
+    if ref.startswith("table:"):
+        paths = [urlparse(f).path for f in spark.table(ref[6:]).inputFiles()]
+    else:
+        paths = [os.path.join(d, f) for d, _, fs in os.walk(ref) for f in fs]
+    return {p: os.stat(p).st_mtime_ns for p in paths}
+
+
+@pytest.mark.parametrize("kind", ["path", "table"])
+def test_finished_stage_reruns_no_work(spark, docs, expected, kind, caplog):
+    """A rerun over a manifest that marks every partition done returns
+    the written output without invoking the stage, writing output or
+    appending manifest rows."""
+    tmp = tempfile.mkdtemp(prefix="gp_rerun_")
+    if kind == "path":
+        out_ref, man_ref = f"{tmp}/out", f"{tmp}/manifest"
+    else:
+        out_ref, man_ref = "table:gp_rerun_out", "table:gp_rerun_man"
+
+    def manifest_rows() -> int:
+        if kind == "path":
+            return spark.read.parquet(man_ref).count()
+        return spark.table(man_ref[6:]).count()
+
+    try:
+        n_parts = 8
+        resumable_stage(spark, docs, extract, out_ref, man_ref,
+                        run_id="r1", n_parts=n_parts)
+        rows_before, files_before = manifest_rows(), _output_files(spark, out_ref)
+        assert rows_before == n_parts and files_before
+
+        caplog.set_level(logging.INFO, logger="geoparser_spark.plans.runtime")
+        out2 = resumable_stage(spark, docs, _never_stage, out_ref, man_ref,
+                               run_id="r2", n_parts=n_parts)
+        assert manifest_rows() == rows_before
+        assert _output_files(spark, out_ref) == files_before
+        _assert_span_equality(out2, expected)
+        [msg] = [r.getMessage() for r in caplog.records
+                 if r.name == "geoparser_spark.plans.runtime"]
+        assert "8 of 8 logical partitions done, 0 to do" in msg
+        assert "short-circuit" in msg
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+        spark.sql("DROP TABLE IF EXISTS gp_rerun_out")
+        spark.sql("DROP TABLE IF EXISTS gp_rerun_man")
+
+
+def test_resume_stage_planning_launches_no_job(spark, docs, expected):
+    """On a resume, the todo rows reach the stage as a part_id filter
+    over the source: building the stage's plan (extract_with_skew_split
+    asks the source for its partition count) launches no Spark job."""
+    from geoparser_spark.operators.extract import extract_with_skew_split
+
+    tmp = tempfile.mkdtemp(prefix="gp_plan_")
+    src, out_dir, man_dir = f"{tmp}/docs", f"{tmp}/out", f"{tmp}/manifest"
+    sc = spark.sparkContext
+    seen = {}
+
+    def stage(todo):
+        sc.setJobGroup("gp-resume-planning", "build the resume stage plan")
+        try:
+            planned = extract_with_skew_split(todo, 8, redistribute="mega-only")
+            seen["jobs"] = list(sc.statusTracker().getJobIdsForGroup("gp-resume-planning"))
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description",
+                         "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(prop, None)
+        seen["plan"] = todo._jdf.queryExecution().analyzed().toString()
+        return planned
+
+    try:
+        n_parts = 8
+        docs.write.parquet(src)
+        source = spark.read.parquet(src)
+        first_half = with_part_id(source, n_parts=n_parts).where(F.col("part_id") < 4)
+        resumable_stage(spark, first_half.drop("part_id"), extract, out_dir,
+                        man_dir, run_id="r1", n_parts=n_parts)
+
+        out2 = resumable_stage(spark, source, stage, out_dir, man_dir,
+                               run_id="r2", n_parts=n_parts)
+        assert seen["jobs"] == []
+        filters = [ln for ln in seen["plan"].splitlines() if "Filter" in ln]
+        assert any("part_id" in ln for ln in filters), seen["plan"]
+        assert "Join" not in seen["plan"], seen["plan"]
+        _assert_span_equality(out2, expected)
+        assert spark.read.parquet(man_dir).count() == n_parts
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+class TestReadDoneParts:
+    """Only a manifest with no committed rows reads as "nothing done";
+    an unreadable one raises instead of rerunning every partition."""
+
+    @pytest.mark.parametrize("case", ["missing_path", "missing_table",
+                                      "uncommitted_first_append"])
+    def test_no_committed_manifest_is_empty(self, spark, tmp_path, case):
+        ref = {"missing_path": str(tmp_path / "absent"),
+               "missing_table": "table:gp_absent_manifest",
+               "uncommitted_first_append": str(tmp_path / "manifest")}[case]
+        # a crash during the first manifest append leaves only _temporary/
+        (tmp_path / "manifest" / "_temporary" / "0").mkdir(parents=True)
+        assert read_done_parts(spark, ref).collect() == []
+
+    def test_non_parquet_manifest_raises(self, spark, tmp_path):
+        (tmp_path / "manifest").mkdir()
+        (tmp_path / "manifest" / "part-00000.parquet").write_bytes(b"not parquet")
+        with pytest.raises(Exception, match="FAILED_READ_FILE"):
+            read_done_parts(spark, str(tmp_path / "manifest")).collect()
+
+    def test_corrupt_manifest_rows_raise(self, spark, tmp_path):
+        man = str(tmp_path / "manifest")
+        spark.createDataFrame(
+            [("r1", p, "done") for p in range(64)],
+            "run_id string, partition_id int, status string",
+        ).coalesce(1).write.parquet(man)
+        [data] = [f for f in os.listdir(man) if f.endswith(".parquet")]
+        with open(os.path.join(man, data), "r+b") as f:
+            f.seek(4)  # past the magic: clobber the first column chunk
+            f.write(b"\xff" * 64)
+        with pytest.raises(Exception, match="FAILED_READ_FILE"):
+            read_done_parts(spark, man).collect()
 
 
 # ----------------------------------------------------------- geotag

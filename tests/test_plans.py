@@ -156,18 +156,24 @@ def test_shuffled_tag_join_escape_hatch(spark, gazetteer, docs):
 
 
 def test_auto_surface_budget_picks_plan(spark, gazetteer, docs,
-                                        monkeypatch):
+                                        monkeypatch, caplog):
     """broadcast_surfaces='auto': at or below
     BROADCAST_SURFACE_ROW_BUDGET surface rows the tag join broadcasts;
     above it (budget monkeypatched under the fixture's row count, AQE
     auto-broadcast disabled as in the escape-hatch test) it takes the
-    shuffled plan — the 12M-place GeoNames sizing decision, pinned."""
+    shuffled plan — the 12M-place GeoNames sizing decision, pinned.
+    Each choice is logged with the surface count and the budget."""
+    import logging
+
     import geoparser_spark.operators.geotag as G
     from geoparser_spark.operators.extract import extract
     from geoparser_spark.operators.geotag import doc_texts
 
+    caplog.set_level(logging.INFO, logger=G.__name__)
+    budget_bc = G.BROADCAST_SURFACE_ROW_BUDGET
     texts = doc_texts(extract(docs))
     surf = build_surface_forms(gazetteer)
+    n_surf = surf.count()
     plan_bc = _plan(candidate_mentions(texts, surf,
                                        broadcast_surfaces="auto"))
     assert "BroadcastHashJoin" in plan_bc
@@ -182,6 +188,12 @@ def test_auto_surface_budget_picks_plan(spark, gazetteer, docs,
                ("ShuffledHashJoin" in plan_sh), plan_sh
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    logged = [r.getMessage() for r in caplog.records if r.name == G.__name__]
+    assert logged == [
+        f"candidate_mentions: broadcast_surfaces='auto' counted {n_surf} "
+        f"surfaces against a budget of {budget}: {plan} tag join"
+        for budget, plan in ((budget_bc, "broadcast"), (1, "shuffled"))
+    ]
 
 
 def test_bucketed_join_has_zero_exchanges(spark, tmp_path):
