@@ -18,8 +18,9 @@ Contracts:
     degrade boundary, so a damaged entry yields ``[]`` alone and its
     siblings keep their spans; a member whose own read fails (an
     encrypted or bad-CRC zip entry, a truncated tar body) is dropped
-    alone; a container that cannot be opened or walked at all degrades
-    to ``[]`` at that boundary;
+    alone; a tar stream cut short inside a member keeps the members
+    read before the cut; a container that cannot be opened or walked
+    at all degrades to ``[]`` at that boundary;
   * deterministic: entries are walked in the container's own order
     (zip central-directory order, tar stream order), which is part of
     the file's bytes, never filesystem or hash order;
@@ -39,6 +40,7 @@ import io
 import logging
 import tarfile
 import zipfile
+import zlib
 
 _log = logging.getLogger(__name__)
 
@@ -143,13 +145,28 @@ def zip_spans(raw: bytes, depth: int = 0,
     return out
 
 
+def _tar_members(tf: tarfile.TarFile):
+    """``tf``'s members in stream order.  A stream cut short ends the
+    walk at its first unreadable header: the members before it stand."""
+    members = iter(tf)
+    while True:
+        try:
+            member = next(members)
+        except StopIteration:
+            return
+        except (tarfile.ReadError, EOFError, zlib.error):
+            _log.debug("tar stream ends early", exc_info=True)
+            return
+        yield member
+
+
 def tar_spans(raw: bytes, depth: int = 0,
               budget: _Budget | None = None) -> list[tuple]:
     """tar / tar.gz container → ordered spans (mode ``r:*`` sniffs)."""
     budget = budget or _Budget()
     out: list[tuple] = []
     with tarfile.open(fileobj=io.BytesIO(raw), mode="r:*") as tf:
-        for member in tf:  # stream order
+        for member in _tar_members(tf):
             if not member.isfile():
                 continue
             if not budget.admit(member.size):

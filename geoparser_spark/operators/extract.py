@@ -3,21 +3,32 @@ ordered main-content text + media spans.
 
 Reference dataflow replaced: per-doc HTTP round-trip to a Tika server
 (geoparser_app/views.py:125,357-402 — ~0.6 docs/sec sequential) becomes
-one Arrow-batched ``mapInArrow`` stage: JVM ships columnar batches to
-the Python worker, the worker parses a whole batch, ships columnar
-results back.  No per-row UDF, no driver loop, no network hop.
+one stage with two branches, split per doc on one predicate derived
+from ``_SPAN_EXTRACTORS``:
+  * a doc with a span that needs a Python extractor (a registered kind
+    other than ``text``, with non-empty text) takes the Arrow-batched
+    ``mapInArrow`` kernel: JVM ships columnar batches to the Python
+    worker, the worker parses a whole batch, ships columnar results
+    back.  No per-row UDF, no driver loop, no network hop;
+  * every other doc — plain text and media passthrough only — is
+    extracted by one native Column expression that reproduces the
+    kernel's rules, so its text never crosses JVM↔Python.
 
 This module is the one place a span kind meets its extractor
 (``_SPAN_EXTRACTORS``), the one place a ``*_bytes`` payload is
 base64-decoded, and the one degrade boundary (:func:`extract_span`):
 a damaged payload of any kind becomes that span's ``[]``, never an
 exception that kills the Arrow task.  Archive entries
-(archive_text.py) dispatch through the same call.
+(archive_text.py) dispatch through the same call.  The native branch
+runs no extractor, so it has nothing to degrade.
 
 Scale notes (100 TB design point):
   * The stage is map-only — zero shuffle.  Upstream, runtime.salted_
     repartition spreads mega-documents (BASELINE skew fixture: 0.1% of
     docs own 100-1000x median span count) across partitions.
+  * The two branches read the stage's input twice: where it is not
+    behind an exchange, the source is scanned twice (columnar and
+    pushed-down, like the mega filter of extract_with_skew_split).
   * ``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds Python-worker
     memory per batch regardless of doc size distribution.
   * Catalyst prunes unused columns before the Arrow hop because we
@@ -30,7 +41,8 @@ import base64
 import logging
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 from geoparser_spark.operators.html_main import extract_html_blocks
 from geoparser_spark.operators.biff_legacy import (
@@ -226,23 +238,94 @@ def _extract_arrow_batches(passthrough: tuple[str, ...]):
     return kernel
 
 
-def extract(docs: DataFrame, passthrough: tuple[str, ...] = ()) -> DataFrame:
-    """docs(doc_id, spans[SPAN_IN]) → extracted(doc_id, spans[SPAN_OUT]).
+#: exactly the characters ``str.isspace()`` accepts — the separators
+#: ``str.split()`` (so :func:`_text_span`) collapses.  Handed to
+#: ``F.regexp_replace`` as a Python string: the SQL parser's literal
+#: escapes would rewrite the ``\x0b``-style characters.
+_WS = ("[\t\n\x0b\x0c\r\x1c-\x1f \x85\xa0\u1680\u2000-\u200a"
+       "\u2028\u2029\u202f\u205f\u3000]+")
 
-    ``passthrough`` columns (e.g. chunk_id from
-    plans.runtime.split_mega_docs) ride along unchanged.  Uses
-    ``mapInArrow`` so the only per-span Python cost is the parse itself,
-    not pandas/dict marshalling."""
+#: span kinds whose non-empty text only a Python extractor can read
+_PYTHON_KINDS = sorted(set(_SPAN_EXTRACTORS) - {"text"})
+
+
+def _needs_python(spans: Column) -> Column:
+    """Whether a doc holds a span that must go through the Arrow kernel:
+    a registered kind other than ``text`` with non-empty text.  Never
+    null, so it and its negation split the docs exactly."""
+    return F.coalesce(
+        F.exists(spans, lambda s: s["kind"].isin(_PYTHON_KINDS)
+                 & (F.length(s["text"]) > 0)),
+        F.lit(False))
+
+
+def _native_spans(spans: Column) -> Column:
+    """:func:`extract_doc_spans_cols` as one Column expression, for docs
+    :func:`_needs_python` rejects: the same stable offset sort, media
+    passthrough, whitespace-normalized text, empty-text drop and dense
+    ``order``; a null spans cell gives ``[]``."""
+    def offset(s):
+        return F.coalesce(s["offset"], F.lit(0))
+
+    def out_span(s):
+        kind, text, ref = s["kind"], s["text"], s["media_ref"]
+        has_text = F.coalesce(F.length(text) > 0, F.lit(False))
+        null = F.lit(None).cast("string")
+        return (
+            F.when(ref.isNotNull() & (kind.isin(*MEDIA_KINDS) | ~has_text),
+                   F.struct(F.coalesce(kind, F.lit("")).alias("kind"),
+                            null.alias("text"), ref.alias("media_ref")))
+            .when(has_text,
+                  F.struct(F.lit("text").alias("kind"),
+                           F.trim(F.regexp_replace(text, _WS, " ")).alias("text"),
+                           null.alias("media_ref"))))
+
+    ordered = F.array_sort(spans, lambda l, r: (
+        F.when(offset(l) < offset(r), -1)
+        .when(offset(l) > offset(r), 1)
+        .otherwise(0)))
+    kept = F.filter(F.transform(ordered, out_span), lambda s: s.isNotNull() & (
+        s["media_ref"].isNotNull() | (s["text"] != "")))
+    dense = F.transform(kept, lambda s, i: F.struct(
+        s["kind"], s["text"], s["media_ref"], i.alias("order")))
+    return F.coalesce(dense, F.array()).cast(EXTRACTED["spans"].dataType)
+
+
+def _extract_arrow(docs: DataFrame, passthrough: tuple[str, ...]) -> DataFrame:
+    """Every doc of ``docs`` through the ``mapInArrow`` kernel."""
     from pyspark.sql import types as T
 
     fields = [EXTRACTED["doc_id"]]
     fields += [docs.schema[c] for c in passthrough]
     fields.append(EXTRACTED["spans"])
-    schema = T.StructType(fields)
-    cols = ["doc_id", *passthrough, "spans"]
-    return docs.select(*cols).mapInArrow(
-        _extract_arrow_batches(tuple(passthrough)), schema=schema
+    return docs.select("doc_id", *passthrough, "spans").mapInArrow(
+        _extract_arrow_batches(tuple(passthrough)), schema=T.StructType(fields)
     )
+
+
+def extract(docs: DataFrame, passthrough: tuple[str, ...] = ()) -> DataFrame:
+    """docs(doc_id, spans[SPAN_IN]) → extracted(doc_id, spans[SPAN_OUT]).
+
+    ``passthrough`` columns (e.g. chunk_id from
+    plans.runtime.split_mega_docs) ride along unchanged.
+
+    Each doc takes one of two branches, split by :func:`_needs_python`:
+      * a doc holding a span that needs a Python extractor goes through
+        ``mapInArrow``, so the only per-span Python cost is the parse
+        itself, not pandas/dict marshalling, and every such span meets
+        :func:`extract_span`, the one degrade boundary;
+      * every other doc — text and media spans only — is extracted by
+        :func:`_native_spans` in the JVM: its text never crosses into
+        Python.
+    Both branches give the same spans for a doc the native one takes.
+    Known cost: the union hands a partitioned write up to two tasks'
+    files per input partition, one from each branch (the mixed_job
+    workload written as 16 files: 313 files under extracted/ instead
+    of 249)."""
+    python = _needs_python(F.col("spans"))
+    native = docs.where(~python).select(
+        "doc_id", *passthrough, _native_spans(F.col("spans")).alias("spans"))
+    return _extract_arrow(docs.where(python), passthrough).unionByName(native)
 
 
 def extract_with_skew_split(docs: DataFrame, num_partitions: int,
@@ -257,7 +340,8 @@ def extract_with_skew_split(docs: DataFrame, num_partitions: int,
     ``redistribute="mega-only"`` (default) shuffles ONLY the mega-doc
     chunks: single-chunk docs — 99.9% of the corpus — extract where
     they sit (zero exchanges end-to-end: the salted repartition AND the
-    reassemble groupBy both apply to the 0.1% branch alone).  At 100 TB
+    reassemble groupBy both apply to the 0.1% branch alone, and a mega
+    doc that needs no Python extractor skips them too).  At 100 TB
     this converts two full-corpus shuffles into two 0.1%-sized ones;
     parallelism for the map branch comes from the source's own split
     planning (parquet scans split at maxPartitionBytes), which is the
@@ -272,9 +356,8 @@ def extract_with_skew_split(docs: DataFrame, num_partitions: int,
     row-groups, heavily skewed file sizes) where the scan cannot
     provide parallelism and the up-front full shuffle is worth paying.
     """
-    from pyspark.sql import functions as F
-
-    from geoparser_spark.plans.runtime import reassemble_chunks, split_mega_docs
+    from geoparser_spark.plans.runtime import (
+        reassemble_chunks, salted_repartition, split_mega_docs)
 
     if redistribute not in ("mega-only", "mega-only-strict", "all"):
         raise ValueError(
@@ -299,12 +382,12 @@ def extract_with_skew_split(docs: DataFrame, num_partitions: int,
             redistribute = "all"
     elif redistribute == "mega-only-strict":
         redistribute = "mega-only"
-    salt = F.pmod(
-        F.xxhash64(F.col("doc_id"), F.col("chunk_id"), F.lit(seed)),
-        F.lit(num_partitions),
-    )
+
+    def salted(chunks: DataFrame) -> DataFrame:
+        return salted_repartition(chunks, num_partitions, ("doc_id", "chunk_id"), seed)
+
     if redistribute == "all":
-        chunks = split_mega_docs(docs, max_spans).repartition(num_partitions, salt)
+        chunks = salted(split_mega_docs(docs, max_spans))
         return reassemble_chunks(extract(chunks, passthrough=("chunk_id",)))
     # singles skip the chunking machinery entirely: n_chunks == 1 iff
     # size(spans) <= max_spans (F.size is -1 for NULL — still single),
@@ -312,10 +395,14 @@ def extract_with_skew_split(docs: DataFrame, num_partitions: int,
     # the split's pre-sort adds nothing for an unsplit doc.  (Relative
     # order of EQUAL offsets is unspecified either way — the documented
     # stable-sort caveat on extract_doc_spans_cols.)
-    singles = docs.where(F.size("spans") <= max_spans)
-    mega = (
-        split_mega_docs(docs.where(F.size("spans") > max_spans), max_spans)
-        .repartition(num_partitions, salt)
-    )
-    ex_mega = reassemble_chunks(extract(mega, passthrough=("chunk_id",)))
+    # A mega doc that needs no Python extractor joins them: the native
+    # projection costs no Python worker, so it needs no spread, and its
+    # stable whole-doc sort gives what split + reassemble would.  The
+    # chunks of the other mega docs go straight to the Arrow kernel:
+    # extract()'s routing filter would be pushed below the salt and
+    # salt each branch separately.
+    mega = (F.size("spans") > max_spans) & _needs_python(F.col("spans"))
+    singles = docs.where(~mega)
+    chunks = salted(split_mega_docs(docs.where(mega), max_spans))
+    ex_mega = reassemble_chunks(_extract_arrow(chunks, ("chunk_id",)))
     return extract(singles).unionByName(ex_mega)

@@ -43,12 +43,19 @@ _log = logging.getLogger(__name__)
 # --------------------------------------------------------------- skew
 
 def salted_repartition(df: DataFrame, num_partitions: int,
-                       key: str = "doc_id", seed: int = 42) -> DataFrame:
+                       key: str | tuple[str, ...] = "doc_id",
+                       seed: int = 42) -> DataFrame:
     """Deterministic uniform spread of rows across partitions keyed by
-    a hash of (key, seed) — not round-robin (which depends on input
+    a hash of (key..., seed) — not round-robin (which depends on input
     order) and not plain key-hash ranges (which can collide hot).
-    Used before the extract stage (SURVEY.md §4.2)."""
-    salt = F.pmod(F.xxhash64(F.col(key), F.lit(seed)), F.lit(num_partitions))
+    Used before the extract stage (SURVEY.md §4.2).
+
+    The exchange buckets on the 64-bit hash itself: pre-reducing it to
+    ``pmod(hash, n)`` would leave n distinct values for Spark to hash
+    into n buckets again, and their collisions empty about a third of
+    the partitions."""
+    keys = (key,) if isinstance(key, str) else key
+    salt = F.xxhash64(*(F.col(k) for k in keys), F.lit(seed))
     return df.repartition(num_partitions, salt)
 
 
@@ -202,7 +209,11 @@ def read_done_parts(spark: SparkSession, manifest_dir: str) -> DataFrame:
     or catalog table, or a directory without data files — reads as
     "nothing done".  Any other failure (an unreadable or corrupt
     manifest) raises: treating it as empty would rerun every partition
-    and append a second 'done' row for each."""
+    and append a second 'done' row for each.
+
+    "Nothing done" is an empty ``spark.range``: a JVM-only plan, so a
+    first run's done-set read starts no Python worker (an empty
+    ``spark.createDataFrame`` is a Python-backed scan)."""
     from pyspark.errors import AnalysisException
 
     try:
@@ -210,7 +221,7 @@ def read_done_parts(spark: SparkSession, manifest_dir: str) -> DataFrame:
     except AnalysisException as e:
         if e.getCondition() not in _MISSING_REF_CONDITIONS:
             raise
-        return spark.createDataFrame([], "part_id int")
+        return spark.range(0).select(F.col("id").cast("int").alias("part_id"))
     return (
         m.where(F.col("status") == "done")
         .select(F.col("partition_id").alias("part_id"))

@@ -232,6 +232,20 @@ class TestDamagedContainersDegrade:
             ("text", "second good entry", None),
         ]
 
+    @pytest.mark.parametrize("cut", ["body", "header"])
+    def test_truncated_tar_keeps_earlier_members(self, cut):
+        raw = _tar_bytes([
+            ("a.txt", b"alpha entry"),
+            ("b.txt", b"beta entry"),
+            ("c.txt", b"gamma entry " * 100),
+        ])
+        header = raw.index(b"c.txt")  # tar headers open with the name
+        end = header + 512 + 100 if cut == "body" else header + 100
+        assert extract_span("tar_bytes", _b64(raw[:end])) == [
+            ("text", "alpha entry", None),
+            ("text", "beta entry", None),
+        ]
+
     def test_corrupt_nested_zip_keeps_siblings(self):
         raw = _zip_bytes([
             ("good.txt", b"first good entry"),

@@ -65,6 +65,20 @@ def test_extract_invariant_under_repartition(docs, expected):
     _assert_span_equality(extract(salted_repartition(docs, 13)), expected)
 
 
+@pytest.mark.parametrize("key", ["doc_id", ("doc_id", "chunk_id")])
+def test_salted_repartition_fills_every_partition(spark, key):
+    """The exchange buckets on the salt hash itself: a salt pre-reduced
+    to pmod(hash, n) is hashed again into n buckets, and its collisions
+    leave about a third of the partitions empty."""
+    rows = spark.range(1600).select(
+        F.format_string("doc-%04d", "id").alias("doc_id"),
+        F.lit(0).alias("chunk_id"))
+    sizes = (salted_repartition(rows, 16, key)
+             .groupBy(F.spark_partition_id().alias("p")).count().collect())
+    assert len(sizes) == 16
+    assert max(r["count"] for r in sizes) < 2 * 1600 / 16
+
+
 def test_split_mega_docs_roundtrip(docs, expected):
     # chunk spans keep their source offsets; extract per chunk
     # (chunk_id as a passthrough column) then reassemble in chunk order
@@ -261,7 +275,12 @@ class TestReadDoneParts:
                "uncommitted_first_append": str(tmp_path / "manifest")}[case]
         # a crash during the first manifest append leaves only _temporary/
         (tmp_path / "manifest" / "_temporary" / "0").mkdir(parents=True)
-        assert read_done_parts(spark, ref).collect() == []
+        done = read_done_parts(spark, ref)
+        assert done.collect() == []
+        assert done.dtypes == [("part_id", "int")]
+        # JVM-only: a Python-backed scan would start a worker family
+        plan = done._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan
 
     def test_non_parquet_manifest_raises(self, spark, tmp_path):
         (tmp_path / "manifest").mkdir()
