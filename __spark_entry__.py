@@ -3009,8 +3009,8 @@ def _web_extract_links(spark, sf_dir):
     """Outbound-link extraction over synthesized pages: each doc's
     HTML carries one absolute link, one fragment/mailto (skipped) and
     one relative link; the kernel must return exactly the two real
-    hrefs in document order (operators/urls.links_from_html — same
-    parse chain as the main-content extractor)."""
+    hrefs in document order (operators/urls.links_from_html — the same
+    one-pass scanner as the main-content extractor)."""
     from geoparser_spark.operators.urls import links_from_html
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")

@@ -94,8 +94,8 @@ def url_dedup(df: DataFrame, url_col: str = "url") -> DataFrame:
 def links_from_html(docs: "DataFrame", html_col: str = "html",
                     id_col: str = "doc_id") -> "DataFrame":
     """Outbound-link table: (id, pos, url) for every <a href> in
-    document order (operators/html_main.extract_links — same parse
-    chain as the main-content extractor).  Arrow-batched map-only
+    document order (operators/html_main.extract_links — the same
+    one-pass scanner as the main-content extractor).  Arrow-batched map-only
     kernel; feeds canonicalize_url + the host-graph edge derivation
     that pagerank consumes — WARC pages → links → canonical hosts →
     ranking, the full crawl-curation loop."""

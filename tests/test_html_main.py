@@ -4,6 +4,8 @@ Fixtures are handcrafted — expected outputs written by hand from the
 documented algorithm, not generated by the code under test.
 """
 
+from html_reference import reference_blocks, reference_links
+
 from geoparser_spark.operators.html_main import extract_html_blocks
 
 
@@ -79,7 +81,7 @@ def test_media_inside_dropped_container_is_dropped():
 
 
 def test_hopeless_markup_falls_back():
-    # still deterministic: tag-stripped text
+    # no markup at all: the whole input is one text block
     out = extract_html_blocks("just plain text, no tags")
     assert out == [("text", "just plain text, no tags", None)]
 
@@ -105,23 +107,12 @@ def test_list_items():
 
 
 def test_fast_tokenizer_matches_htmlparser_path():
-    """The regex tokenizer and the stdlib-HTMLParser fallback must
-    produce identical trees/output on realistic and adversarial
-    markup."""
+    """The one-pass scanner and the stdlib-HTMLParser reference
+    (tests/html_reference.py) must produce identical blocks and links
+    on realistic and adversarial markup."""
     import pandas as pd
-    from geoparser_spark.operators.html_main import (
-        _Emitter, _TreeBuilder, _fast_tree, extract_html_blocks,
-    )
+    from geoparser_spark.operators.html_main import extract_links
     from geoparser_spark.testing.corpus import _gen_batches
-
-    def via_htmlparser(html):
-        b = _TreeBuilder(); b.feed(html); b.close()
-        e = _Emitter(); e.walk(b.root)
-        return e.finish()
-
-    def via_fast(html):
-        e = _Emitter(); e.walk(_fast_tree(html))
-        return e.finish()
 
     cases = [
         "<p>a &amp; b</p>",
@@ -153,7 +144,8 @@ def test_fast_tokenizer_matches_htmlparser_path():
                 cases.append(s["text"])
 
     for html in cases:
-        assert via_fast(html) == via_htmlparser(html), html[:120]
+        assert extract_html_blocks(html) == reference_blocks(html), html[:120]
+        assert extract_links(html) == reference_links(html), html[:120]
 
 
 def test_quoted_gt_in_attribute_value():
@@ -168,20 +160,13 @@ def test_quoted_gt_in_attribute_value():
 
 
 def test_quote_imbalanced_tag_falls_back_to_htmlparser():
-    """An unbalanced quote inside a tag body makes the fast tokenizer
-    reject the document; output must equal the HTMLParser path."""
-    from geoparser_spark.operators.html_main import _Emitter, _TreeBuilder
-
+    """A tag whose quoted attribute value never closes is not a tag:
+    its '<' is text, and the output equals the HTMLParser reference."""
     for html in (
         '<p data-x="unclosed>text</p>',
         "<a href='half>link text</a><p>tail</p>",
     ):
-        b = _TreeBuilder()
-        b.feed(html)
-        b.close()
-        e = _Emitter()
-        e.walk(b.root)
-        assert extract_html_blocks(html) == e.finish(), html
+        assert extract_html_blocks(html) == reference_blocks(html), html
 
 
 def test_extract_links_order_and_filters():
@@ -197,6 +182,27 @@ def test_extract_links_order_and_filters():
                                 "https://b.com/2?q=1"]
     assert extract_links("") == []
     assert extract_links("<<<hopeless") == []
+
+
+def test_stray_lt_elsewhere_does_not_change_output():
+    """A stray '<' (``1<2``, ``x < y``) is a one-char text chunk and
+    changes nothing else: the rest of the page gives the same blocks
+    with or without it."""
+    # an unterminated tag at end of input is markup, stray '<' or not
+    for html in ("<p>a</p><p>tail <b", "<p>a 1<2</p><p>tail <b"):
+        assert extract_html_blocks(html)[-1] == ("text", "tail", None), html
+    assert extract_html_blocks("<p>x</p><span") == [("text", "x", None)]
+    assert extract_html_blocks("<p>x < y</p><span") == [
+        ("text", "x < y", None)]
+    # an unterminated comment runs to end of input, stray '<' or not
+    assert extract_html_blocks("<p>a</p><!-- open <p>b</p>") == [
+        ("text", "a", None)]
+    assert extract_html_blocks("<p>a 1<2</p><!-- open <p>b</p>") == [
+        ("text", "a 1<2", None)]
+    # html.parser raises on this '<![' junk: '<=' stays text and
+    # '<![b=>' is skipped as a declaration
+    assert extract_html_blocks('"bx<=D\'CDx<![b=>;bDD') == [
+        ("text", '"bx<=D\'CDx;bDD', None)]
 
 
 def test_deep_nesting_degrades_not_crashes():
